@@ -10,17 +10,166 @@ skew-join splitting and join strategy are re-planned at runtime from real
 statistics; on a 1000-executor cluster the same confs hold — only
 ``spark.sql.shuffle.partitions`` (the AQE *initial* value) and memory sizing
 change with cluster size.
+
+Local filesystem: without libhadoop (PySpark's bundled Hadoop ships none),
+Hadoop's ``RawLocalFileSystem.setPermission`` forks a ``chmod`` process, and
+``ChecksumFileSystem.create`` calls it for every data file and again for its
+``.crc`` — two forks per fragment written. On a local master ``file://`` is
+therefore ``polario_spark/jvm/NoForkLocalFileSystem.java``: Hadoop's
+checksummed ``LocalFileSystem`` over a raw layer that sets the same
+permission bits through ``java.nio`` (the sticky bit, which NIO cannot
+express, still goes through the stock call). ``.crc`` files are written and
+verified as before, the umask applies as before (files 644, directories 755
+under the default 022), and the on-disk layout is unchanged. Like the class
+Spark's bundled jars register for ``file://`` (Hive's
+``ProxyLocalFileSystem``), it refuses to rename onto an existing file. The
+source is compiled once per source hash with the JDK's ``javac`` into a jar
+under the temp root. Sessions on a non-local master (whose executors lack
+the jar, and whose writes go to S3A/HDFS, which never fork), hosts without
+``javac``, and driver JVMs that cannot load the class keep the stock
+filesystem.
 """
 
 from __future__ import annotations
 
+import hashlib
+import logging
 import os
+import shutil
+import subprocess
+import tempfile
+import zipfile
+from glob import glob
 
+from py4j.protocol import Py4JJavaError
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
 
 #: Reference default: DEFAULT_ROWS_PER_FRAGMENT = int(1e6)
 #: (/root/reference/polario/hive_dataset.py:17)
 DEFAULT_ROWS_PER_FRAGMENT = 1_000_000
+
+#: The fork-free checksummed local filesystem (see the module docstring)
+NOFORK_FS_SOURCE = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "NoForkLocalFileSystem.java"
+)
+NOFORK_FS_CLASS = "polario_spark.jvm.NoForkLocalFileSystem"
+_CLASSPATH = "spark.driver.extraClassPath"
+_KEEPS_STOCK_FS = "file:// keeps the stock Hadoop filesystem"
+
+
+def host_memory_bytes(
+    cgroup_files: tuple[str, ...] = (
+        "/sys/fs/cgroup/memory.max",
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+    ),
+) -> int:
+    """Physical memory, capped by a cgroup v2 or v1 limit when one is set."""
+    limit = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in cgroup_files:
+        try:
+            with open(path) as fh:
+                value = fh.read().strip()
+        except OSError:
+            continue
+        if value.isdigit():  # cgroup v2 writes "max" for no limit
+            limit = min(limit, int(value))
+    return limit
+
+
+def default_driver_memory(total_bytes: int) -> str:
+    """Half of ``total_bytes`` as a driver heap, in whole GiB from 1g to 32g.
+
+    A local master runs every task inside the driver JVM, so the heap is
+    all of their execution memory; the other half is left to the Python
+    workers, off-heap Arrow buffers and the page cache. Cluster deployments
+    size executor memory externally and never use this default.
+    """
+    return f"{max(1, min(32, total_bytes // 2 // 2**30))}g"
+
+
+def _find_javac() -> str | None:
+    """The JDK's javac: ``$JAVA_HOME/bin/javac`` (the JDK Spark launches
+    from), else the first on PATH."""
+    home = os.environ.get("JAVA_HOME")
+    if home and os.access(os.path.join(home, "bin", "javac"), os.X_OK):
+        return os.path.join(home, "bin", "javac")
+    return shutil.which("javac")
+
+
+def _nofork_fs_jar() -> str | None:
+    """The jar holding ``NOFORK_FS_CLASS``, compiled on first use into a
+    cache under the temp root keyed by the source hash; None, with one log
+    line, when the host has no javac or the compile fails."""
+    javac = _find_javac()
+    if javac is None:
+        _log.warning("no javac on this host: %s", _KEEPS_STOCK_FS)
+        return None
+    with open(NOFORK_FS_SOURCE, "rb") as fh:
+        digest = hashlib.sha256(fh.read()).hexdigest()[:16]
+    cache = os.path.join(tempfile.gettempdir(), "polario_spark_jvm")
+    jar = os.path.join(cache, f"NoForkLocalFileSystem-{digest}.jar")
+    if os.path.exists(jar):
+        return jar
+    os.makedirs(cache, exist_ok=True)
+    # the Hadoop API jar alone compiles in half the time of all of jars/
+    hadoop_api = glob(os.path.join(_find_spark_home(), "jars", "hadoop-client-api-*.jar"))
+    with tempfile.TemporaryDirectory(dir=cache) as build:
+        javac_run = subprocess.run(
+            [javac, "--release", "17", "-cp", os.pathsep.join(hadoop_api),
+             "-d", build, NOFORK_FS_SOURCE],
+            capture_output=True, text=True,
+        )
+        if javac_run.returncode:
+            _log.warning("javac failed, %s: %s", _KEEPS_STOCK_FS, javac_run.stderr.strip())
+            return None
+        # written aside and renamed, so a concurrent session never sees a
+        # partial jar
+        partial = os.path.join(build, "partial.jar")
+        with zipfile.ZipFile(partial, "w") as zf:
+            for path in glob(os.path.join(build, "**", "*.class"), recursive=True):
+                zf.write(path, os.path.relpath(path, build))
+        os.replace(partial, jar)
+    return jar
+
+
+def _driver_can_load(cls: str) -> bool:
+    """Whether the session's driver JVM will load ``cls`` from
+    ``spark.driver.extraClassPath``: true when getOrCreate is about to
+    launch it, else asked of the running gateway."""
+    gateway = SparkContext._gateway
+    if gateway is None:
+        # a JVM handed over by spark-submit was launched without the jar
+        return "PYSPARK_GATEWAY_PORT" not in os.environ
+    try:
+        gateway.jvm.java.lang.Class.forName(cls)
+    except Py4JJavaError:
+        return False
+    return True
+
+
+def _with_nofork_fs(master: str, conf: dict[str, str]) -> dict[str, str]:
+    """``conf`` plus what makes ``file://`` the fork-free filesystem on a
+    local master: the jar appended to the caller's driver classpath, and
+    ``fs.file.impl`` (unless the caller set one) when the driver JVM can
+    load the class. Elsewhere ``conf`` unchanged, with one log line."""
+    if master != "local" and not master.startswith("local["):
+        _log.info("master %s is not local: %s", master, _KEEPS_STOCK_FS)
+        return conf
+    jar = _nofork_fs_jar()
+    if jar is None:
+        return conf
+    conf = {**conf, _CLASSPATH: os.pathsep.join(filter(None, (conf.get(_CLASSPATH), jar)))}
+    if _driver_can_load(NOFORK_FS_CLASS):
+        conf.setdefault("spark.hadoop.fs.file.impl", NOFORK_FS_CLASS)
+    else:
+        _log.warning(
+            "the running driver JVM cannot load %s: %s", NOFORK_FS_CLASS, _KEEPS_STOCK_FS
+        )
+    return conf
 
 
 def get_spark(
@@ -73,15 +222,14 @@ def get_spark(
         # session tz makes the instant identical to the old ns-long path).
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.ui.enabled", "false")
-        # local[32] runs 32 concurrent tasks inside the driver JVM; at 8g
-        # each task slot gets ~75 MB of execution memory and heavy queries
-        # pay GC instead of spilling usefully. The container has 128 GiB;
-        # 32g keeps per-slot memory (~300 MB) comfortably above every
-        # operator's working set at bench scale. Cluster deployments size
-        # executor memory externally and never hit this default.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        # half of host (or cgroup) memory, 1g-32g: see default_driver_memory
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or default_driver_memory(host_memory_bytes()),
+        )
     )
-    for key, value in (extra_conf or {}).items():
+    for key, value in _with_nofork_fs(master, extra_conf or {}).items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -21,6 +21,7 @@ import sys
 
 import duckdb
 import pyarrow as pa
+from pyspark.sql.pandas.types import to_arrow_schema
 
 sys.path.insert(0, "/root/repo")
 
@@ -93,7 +94,8 @@ def main() -> int:
         try:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
-            stbl = sdf.toArrow()
+            # toArrow()'s column types, without running the plan a second time
+            stbl = to_arrow_schema(sdf.schema).empty_table()
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as exc:
             failures.append(name)
