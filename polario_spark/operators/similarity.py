@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from polario_spark.functions import text as TXT
@@ -1785,81 +1785,46 @@ def default_stride_centroids(
     )
 
 
-def kmeans_centroids(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    iters: int = 3,
-    n_hint: Optional[int] = None,
-    return_matrix: bool = False,
-):
-    """Lloyd refinement of IVF centroids: (cid, __cent), no RNG.
-
-    Initialization is the same deterministic stride subset ``ivf_topk``
-    uses by default, then ``iters`` rounds of assign + recompute-means
-    tighten the cells. No RNG anywhere — but true bitwise reproducibility
-    holds only in a single-JVM session (pinned by pytest): the centroid
-    means are float ``avg()`` aggregates whose partial-merge order
-    follows shuffle-fetch order, so on a multi-executor cluster
-    bitwise-different means can flip a near-tie argmax assignment. The
-    registry entry therefore MATERIALIZES the computed centroids to
-    parquet and oracles the probe+search over that table — the oracle
-    never depends on replaying the refinement.
-
-    Scale shape per round (round-10 GEMM rewrite — the MLlib KMeans
-    structure): the round's centroid matrix lives DRIVER-SIDE as numpy
-    (K ~ sqrt(n) rows x dim — see _collect_centroid_matrix for the size
-    argument) and is broadcast into ONE job per round: GEMM-argmax each
-    Arrow batch of the corpus (``_gemm_assign_frame`` — replacing the
-    interpreted per-(vector, centroid) HOF fold, 26.9 s/pass at the
-    volume probe's x100 point), posexplode the assignments to (cell,
-    pos) partial sums — map-side combine collapses them to |cells| x dim
-    rows per task before the exchange — and collect the K x dim means
-    straight back to the driver for the next round. No per-round
-    localCheckpoint (the numpy handoff already severs lineage — each
-    round's plan is the constant-depth scan -> GEMM -> agg), no
-    per-round dup-collapse (the canonical frame is built once, and its
-    agg is the only corpus-volume exchange per round).
-
-    Input rows are canonicalized once (``canonical_vectors``): duplicate
-    ids contribute ONE vector to every mean and one assignment row —
-    matching the dup-collapse contract of assign_cells/the oracles.
-    """
-    import numpy as np
-
-    corpus = ensure_parallelism(corpus)
-    spark = corpus.sparkSession
-    # Round 16 (opt): carry each canonical row's raw multiplicity so the
-    # init-stride count can ride the SAME job as the init-centroid
-    # collect (the fused-job trick of collect_stride_centroids); the
-    # loop's GEMM passes prune to __v, so the extra int column costs
-    # checkpoint storage only.
-    vecs = (
+def _counted_canonical(
+    corpus: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """``canonical_vectors`` plus each id's raw row multiplicity ``__c``:
+    (nid, __v, __c). The sum of ``__c`` is the exact raw row count, so
+    the stride sizing and the centroid candidates can come out of ONE
+    aggregate over this frame (``_stride_centroid_matrix``)."""
+    return (
         corpus.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("__v"))
         .groupBy("nid")
         .agg(F.max("__v").alias("__v"), F.count(F.lit(1)).alias("__c"))
-        .select(
-            "nid",
-            F.expr("transform(__v, x -> cast(x as double))").alias("__v"),
-            "__c",
-        )
     )
-    # Round 15 (opt): materialize the canonical frame ONCE — every Lloyd
-    # round's plan otherwise re-executes scan -> repartition -> the
-    # dup-collapse agg, i.e. the loop's only corpus-volume exchange runs
-    # `iters` times instead of once (guide §2.4 remove shuffles; the
-    # MLlib KMeans contract likewise requires its input cached). Lazy
-    # localCheckpoint: materializes under the first round's action,
-    # rounds 2+ read the stored partitions; release_cached_residue
-    # sweeps the blocks between bench runs.
-    vecs = vecs.localCheckpoint(eager=False)
-    cent_np = None
+
+
+def _stride_centroid_matrix(
+    corpus: DataFrame, vecs: DataFrame, n_hint: Optional[int]
+):
+    """The default-stride centroid triplet of ``corpus`` from its counted
+    canonical frame ``vecs`` (``_counted_canonical``), in ONE job when
+    ``n_hint`` is given: a single aggregate returns the raw row count
+    together with the canonical candidates at the stride the hint
+    implies.
+
+    ``n_hint`` is an UPPER BOUND on the corpus row count (parquet footer
+    rows — the corpus frames here are footer rows minus shed malformed
+    vectors). Because ``adaptive_centroid_stride`` is monotone, the
+    guessed stride is >= the true stride; when they are EQUAL (no or few
+    malformed rows) the candidates at ``nid % guess == 0`` are exactly
+    the centroid set. When shed rows push the true count into a lower
+    power-of-4 bracket (guess > stride: the candidates would be a SUBSET
+    of what is needed), the exact count from that job sizes one more
+    collect; with no hint, a ``count()`` job and the collect. Every path
+    returns the triplet ``_collect_centroid_matrix(
+    default_stride_centroids(corpus))`` returns: the candidates come from
+    the same canonical ``max(__v)`` aggregate and the stride from the
+    same exact raw count, and the driver holds ~sqrt(n) candidate rows,
+    the volume the plain collect already pays.
+    """
+    n = None
     if n_hint is not None and n_hint > 0:
-        # fused init (one job, which also materializes the checkpoint):
-        # exact raw count = sum of per-id multiplicities; candidates at
-        # the hint-guessed stride. Same fallback contract as
-        # collect_stride_centroids: a true count in a lower power-of-4
-        # bracket than the hint makes the candidate set incomplete.
         guess = adaptive_centroid_stride(n_hint)
         row = (
             vecs.groupBy()
@@ -1871,50 +1836,89 @@ def kmeans_centroids(
             )
             .collect()[0]
         )
-        init_stride = adaptive_centroid_stride(row["n"] or 0)
-        if init_stride >= guess:
-            pairs = sorted(
+        n = row["n"] or 0
+        stride = adaptive_centroid_stride(n)
+        if stride >= guess:
+            return _centroid_triplet(
                 (r["nid"], r["__v"])
                 for r in (row["cand"] or [])
-                if r["nid"] % init_stride == 0
+                if r["nid"] % stride == 0
             )
-            ids = np.array([p[0] for p in pairs], np.int64)
-            if pairs:
-                mat = np.stack([np.asarray(p[1], np.float64) for p in pairs])
-                norms = np.maximum(np.sqrt((mat * mat).sum(axis=1)), 1e-12)
-                cent_np = (ids, mat, norms)
-            else:
-                cent_np = (ids, np.empty((0, 0)), np.empty(0))
-        else:
-            cent_np = _collect_centroid_matrix(
-                vecs.filter(F.col("nid") % init_stride == 0).select(
-                    F.col("nid").alias("cid"), F.col("__v").alias("__cent")
-                )
-            )
-    if cent_np is None:
-        init_stride = adaptive_centroid_stride(corpus.count())
-        cent_np = _collect_centroid_matrix(
-            vecs.filter(F.col("nid") % init_stride == 0).select(
-                F.col("nid").alias("cid"), F.col("__v").alias("__cent")
-            )
+    stride = adaptive_centroid_stride(corpus.count() if n is None else n)
+    return _collect_centroid_matrix(
+        vecs.filter(F.col("nid") % stride == 0).select(
+            F.col("nid").alias("cid"), F.col("__v").alias("__cent")
         )
-    mean_rows: list = []
+    )
+
+
+def kmeans_centroid_matrix(
+    corpus: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    iters: int = 3,
+    n_hint: Optional[int] = None,
+):
+    """Lloyd refinement of IVF centroids as the driver-side
+    ``(ids, matrix, norms)`` triplet (see ``_centroid_triplet``), no RNG;
+    ``kmeans_centroids`` is the same centroids as a (cid, __cent) frame.
+
+    Initialization is the same deterministic stride subset ``ivf_topk``
+    uses by default (``n_hint``: see ``_stride_centroid_matrix``), then
+    ``iters`` rounds of assign + recompute-means tighten the cells. No
+    RNG anywhere — but true bitwise reproducibility holds only in a
+    single-JVM session (pinned by pytest): the centroid means are float
+    sums whose partial-merge order follows shuffle-fetch order, so on a
+    multi-executor cluster bitwise-different means can flip a near-tie
+    argmax assignment. The registry entry therefore MATERIALIZES the
+    computed centroids to parquet and oracles the probe+search over that
+    table — the oracle never depends on replaying the refinement.
+
+    Scale shape per round (the MLlib KMeans structure): the round's
+    centroid matrix lives DRIVER-SIDE as numpy (K ~ sqrt(n) rows x dim —
+    see _collect_centroid_matrix for the size argument) and is broadcast
+    into ONE job per round: GEMM-argmax each Arrow batch of the corpus
+    (``_gemm_partial_means``), emit per-task (cell, sum, count) partials
+    — touched cells x (dim + 1) rows per task, never the corpus — and
+    collect the K x dim means straight back to the driver for the next
+    round. No per-round localCheckpoint (the numpy handoff already
+    severs lineage — each round's plan is the constant-depth scan ->
+    GEMM -> agg), no per-round dup-collapse (the canonical frame is
+    built once, and its agg is the only corpus-volume exchange).
+
+    Input rows are canonicalized once (``canonical_vectors``): duplicate
+    ids contribute ONE vector to every mean and one assignment row —
+    matching the dup-collapse contract of assign_cells/the oracles.
+    """
+    corpus = ensure_parallelism(corpus)
+    spark = corpus.sparkSession
+    # The canonical frame is checkpointed ONCE: every Lloyd round's plan
+    # would otherwise re-execute scan -> repartition -> the dup-collapse
+    # agg, the loop's only corpus-volume exchange (the MLlib KMeans
+    # contract likewise requires its input cached). Lazy: it
+    # materializes under the init job, later rounds read the stored
+    # partitions; release_cached_residue sweeps the blocks. The loop's
+    # GEMM passes prune ``__c`` (which only the fused init reads).
+    vecs = (
+        _counted_canonical(corpus, id_col, vec_col)
+        .select(
+            "nid",
+            F.expr("transform(__v, x -> cast(x as double))").alias("__v"),
+            "__c",
+        )
+        .localCheckpoint(eager=False)
+    )
+    cent_np = _stride_centroid_matrix(corpus, vecs, n_hint)
     for _ in range(iters):
         # round-owned broadcast: the collect below is the ONLY consumer
         # of this round's partials, so the K x dim blob is released
-        # eagerly instead of waiting for closure GC (advisor r10)
+        # eagerly instead of waiting for closure GC
         bc = spark.sparkContext.broadcast(cent_np)
         try:
-            # Round 11: the round's exchange carries PER-TASK PARTIALS
-            # (touched-cells x (dim+1) rows per task), not the corpus —
-            # the earlier posexplode shape shuffled n x dim scalar rows
-            # per round (320M at the x100 probe point), which was the
-            # loop's dominant cost once the GEMM removed the assignment
-            # cost. Sum partials per (cell, pos), then divide by the
-            # count slot driver-side. Float summation order differs from
-            # the old per-value avg() by design — the registry entry
-            # materializes the refined centroids, so both engines always
-            # consume the same bytes (see the determinism note above).
+            # Sum partials per (cell, pos), then divide by the count
+            # slot. The registry entry materializes the refined
+            # centroids, so both engines consume the same bytes whatever
+            # the float summation order (determinism note above).
             partials = _gemm_partial_means(vecs, bc)
             mean_rows = (
                 partials.select(
@@ -1940,29 +1944,36 @@ def kmeans_centroids(
             bc.unpersist(blocking=False)
         if not mean_rows:  # empty corpus / empty centroid init
             break
-        mean_rows.sort(key=lambda r: r["cid"])
-        ids = np.array([r["cid"] for r in mean_rows], np.int64)
-        mat = np.stack([np.asarray(r["__cent"], np.float64) for r in mean_rows])
-        cent_np = (ids, mat, np.maximum(np.sqrt((mat * mat).sum(axis=1)), 1e-12))
-    # Round 16 (opt): the loop's final ``cent_np`` IS the triplet
-    # ``_collect_centroid_matrix`` would rebuild from the returned frame
-    # (same mean_rows, same cid sort, same norm clamp; float64 survives
-    # the createDataFrame round-trip exactly — pinned by
-    # tests/test_operators.py::test_kmeans_return_matrix_matches_collect),
-    # so callers that need the matrix can take it here instead of paying
-    # a collect job over the frame.
-    if not mean_rows:  # iters == 0 or empty corpus: the init set stands
-        ids, mat, _ = cent_np
-        frame = spark.createDataFrame(
-            [(int(i), [float(x) for x in v]) for i, v in zip(ids, mat)],
-            "cid long, __cent array<double>",
-        )
-        return (frame, cent_np) if return_matrix else frame
-    frame = spark.createDataFrame(
-        [(r["cid"], list(r["__cent"])) for r in mean_rows],
+        cent_np = _centroid_triplet((r["cid"], r["__cent"]) for r in mean_rows)
+    return cent_np
+
+
+def centroid_frame(spark: SparkSession, cent_np) -> DataFrame:
+    """The (cid long, __cent array<double>) frame of a centroid triplet,
+    rows in cid order. float64 survives the round-trip exactly:
+    ``_collect_centroid_matrix`` of this frame is bitwise ``cent_np``
+    (pinned by tests/test_operators.py::
+    test_kmeans_return_matrix_matches_collect)."""
+    ids, mat, _ = cent_np
+    return spark.createDataFrame(
+        [(int(i), [float(x) for x in v]) for i, v in zip(ids, mat)],
         "cid long, __cent array<double>",
     )
-    return (frame, cent_np) if return_matrix else frame
+
+
+def kmeans_centroids(
+    corpus: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    iters: int = 3,
+    n_hint: Optional[int] = None,
+) -> DataFrame:
+    """Lloyd-refined IVF centroids as a (cid, __cent) frame: the
+    ``centroid_frame`` of ``kmeans_centroid_matrix`` (see there)."""
+    return centroid_frame(
+        corpus.sparkSession,
+        kmeans_centroid_matrix(corpus, id_col, vec_col, iters, n_hint),
+    )
 
 
 def collect_stride_centroids(
@@ -1971,72 +1982,10 @@ def collect_stride_centroids(
     vec_col: str = "embedding",
     n_hint: Optional[int] = None,
 ):
-    """The default-stride centroid matrix in ONE job (round 16): the
-    adaptive-stride ``count()`` and the centroid ``collect()`` were two
-    dependency-serial jobs per entry; this fuses them into a single
-    aggregate that returns (raw row count, canonical centroid candidates
-    at a guessed stride) together.
-
-    ``n_hint`` is an UPPER BOUND on the corpus row count (parquet footer
-    rows — the corpus frames here are footer rows minus shed malformed
-    vectors). Because ``adaptive_centroid_stride`` is monotone, the
-    guessed stride from the hint is >= the true stride; when they are
-    EQUAL (the common case — no/few malformed rows) the collected
-    candidates at ``nid % guess == 0`` are exactly the centroid set and
-    the fused job suffices. When the shed rows push the true count into
-    a lower power-of-4 bracket (guess > stride: the candidate set would
-    be a SUBSET of what's needed), or with no hint at all, fall back to
-    the original two-job path. Either way the resulting (ids, matrix,
-    norms) triplet is identical to
-    ``_collect_centroid_matrix(default_stride_centroids(corpus))``:
-    candidates come from the same canonical ``max(__v)`` aggregate, the
-    stride from the same exact raw count, and the driver holds ~sqrt(n)
-    candidate rows — the same volume the plain collect already pays.
-    """
-    import numpy as np
-
-    if n_hint is not None and n_hint > 0:
-        guess = adaptive_centroid_stride(n_hint)
-        row = (
-            corpus.select(
-                F.col(id_col).alias("nid"), F.col(vec_col).alias("__v")
-            )
-            .groupBy("nid")
-            .agg(F.max("__v").alias("__v"), F.count(F.lit(1)).alias("__c"))
-            .groupBy()
-            .agg(
-                F.sum("__c").alias("n"),
-                F.collect_list(
-                    F.when(F.col("nid") % guess == 0, F.struct("nid", "__v"))
-                ).alias("cand"),
-            )
-            .collect()[0]
-        )
-        n = row["n"] or 0
-        stride = adaptive_centroid_stride(n)
-        if stride >= guess:
-            pairs = sorted(
-                (r["nid"], r["__v"])
-                for r in (row["cand"] or [])
-                if r["nid"] % stride == 0
-            )
-            ids = np.array([p[0] for p in pairs], np.int64)
-            if not pairs:
-                return ids, np.empty((0, 0)), np.empty(0)
-            try:
-                mat = np.stack(
-                    [np.asarray(p[1], np.float64) for p in pairs]
-                )
-            except ValueError as exc:
-                raise ValueError(
-                    "centroid vectors must share one dimension — shed "
-                    "malformed rows with well_formed_vectors(dim=...) "
-                    "before clustering"
-                ) from exc
-            norms = np.maximum(np.sqrt((mat * mat).sum(axis=1)), 1e-12)
-            return ids, mat, norms
-    return _collect_centroid_matrix(
-        default_stride_centroids(corpus, id_col, vec_col)
+    """The default-stride centroid triplet, in ONE job given ``n_hint``
+    (a row-count upper bound) — see ``_stride_centroid_matrix``."""
+    return _stride_centroid_matrix(
+        corpus, _counted_canonical(corpus, id_col, vec_col), n_hint
     )
 
 
@@ -2078,30 +2027,22 @@ def _prepared_centroids(
 ASSIGN_CENT_BLOCK = 4096
 
 
-def _collect_centroid_matrix(centroids: DataFrame):
-    """Driver-collect the centroid frame into ``(ids, matrix, norms)``
-    numpy triplet, sorted by cid ASCENDING so np.argmax's first-max
-    tie-break equals the (similarity DESC, cid ASC) order the fold
-    argmax and both oracles use.
-
-    The collect is the Spark MLlib KMeans pattern (clustering/KMeans
-    collects and broadcasts its center matrix every Lloyd round): K is
-    ~sqrt(n) by construction (``adaptive_centroid_stride``), so the
-    driver holds K x dim doubles — ~0.5 GB at n = 10^12, dim 64 — never
-    a corpus-sized collect. Norms are clamped at the shared NORM_EPS so
-    a zero centroid scores 0 against everything instead of NaN.
-    """
+def _centroid_triplet(pairs):
+    """``(ids, matrix, norms)`` numpy triplet from (cid, vector) pairs,
+    sorted by cid ASCENDING so np.argmax's first-max tie-break equals the
+    (similarity DESC, cid ASC) order the fold argmax and both oracles
+    use. Norms are clamped at the shared NORM_EPS so a zero centroid
+    scores 0 against everything instead of NaN. The one place a centroid
+    matrix is built: the stride init, the Lloyd rounds and the frame
+    collect all go through here."""
     import numpy as np
 
-    rows = centroids.select("cid", "__cent").collect()
-    rows.sort(key=lambda r: r["cid"])
-    ids = np.array([r["cid"] for r in rows], np.int64)
-    if len(rows) == 0:
+    pairs = sorted(pairs, key=lambda p: p[0])
+    ids = np.array([p[0] for p in pairs], np.int64)
+    if not pairs:
         return ids, np.empty((0, 0)), np.empty(0)
     try:
-        mat = np.stack(
-            [np.asarray(r["__cent"], np.float64) for r in rows]
-        )
+        mat = np.stack([np.asarray(p[1], np.float64) for p in pairs])
     except ValueError as exc:
         raise ValueError(
             "centroid vectors must share one dimension — shed malformed "
@@ -2109,6 +2050,22 @@ def _collect_centroid_matrix(centroids: DataFrame):
         ) from exc
     norms = np.maximum(np.sqrt((mat * mat).sum(axis=1)), 1e-12)
     return ids, mat, norms
+
+
+def _collect_centroid_matrix(centroids: DataFrame):
+    """Driver-collect a (cid, __cent) centroid frame into its
+    ``_centroid_triplet``.
+
+    The collect is the Spark MLlib KMeans pattern (clustering/KMeans
+    collects and broadcasts its center matrix every Lloyd round): K is
+    ~sqrt(n) by construction (``adaptive_centroid_stride``), so the
+    driver holds K x dim doubles — ~0.5 GB at n = 10^12, dim 64 — never
+    a corpus-sized collect.
+    """
+    return _centroid_triplet(
+        (r["cid"], r["__cent"])
+        for r in centroids.select("cid", "__cent").collect()
+    )
 
 
 def assign_cells(
@@ -2129,13 +2086,12 @@ def assign_cells(
     stride sized so K ~ sqrt(n) — reproducible, oracle-friendly);
     pass ``centroids=kmeans_centroids(corpus)`` for Lloyd-refined cells.
 
-    EXECUTION IS A BLAS GEMM (round-10, the round-9 verdict's named
-    lever): the centroid matrix is driver-collected and broadcast (the
+    EXECUTION IS A BLAS GEMM: the centroid matrix is driver-collected and broadcast (the
     Spark MLlib KMeans pattern — K ~ sqrt(n) rows, see
     ``_collect_centroid_matrix``), and each Arrow batch of corpus vectors
     computes its full batch x K cosine block as one float64 matrix
     multiply inside ``mapInPandas``, blocked at ``ASSIGN_CENT_BLOCK``
-    centroids per step so memory stays bounded at any K. The round-9
+    centroids per step so memory stays bounded at any K. The
     fold-based plan (``assign_cells_fold``) evaluated an INTERPRETED
     aggregate/zip_with dot per (vector, centroid) pair — the volume
     probe measured it at 78M interpreted pairs / 26.9 s at the x100
@@ -2150,7 +2106,7 @@ def assign_cells(
     normalizes the GEMM so emitted sims stay comparable; ``__nv`` is
     re-bound SPARK-SIDE after the kernel with the same clamped-fold
     expression the search path always used, so downstream similarity
-    values are bitwise-unchanged from round 9.
+    values are bitwise those of the fold plan.
 
     DETERMINISM: the BLAS reduction order can differ from the fold's
     sequential sum by ~1 ulp, so a genuinely NEAR-TIED pair of centroids
@@ -2158,7 +2114,7 @@ def assign_cells(
     equal sims) break identically (smallest cid: ids sorted ascending,
     argmax keeps the first max, cross-block update is strict >). Registry
     entries therefore MATERIALIZE the assignment and verify both engines
-    against the same bytes (``assigned_with_vectors`` /
+    against the same bytes (``ivf_topk(assigned=...)`` /
     ``ivf_topk_sql(assigned_sql=...)``) — the materialized-assignment
     treatment the k-means centroid table already gets. In-session the
     kernel is deterministic (fixed BLAS, fixed shapes), pinned by pytest.
@@ -2168,13 +2124,11 @@ def assign_cells(
     argmax is garbage; every registry caller passes dim through.
     """
     corpus = ensure_parallelism(corpus)
-    # ``cent_np`` (round 16): a pre-collected (ids, matrix, norms) triplet
-    # (collect_stride_centroids / _collect_centroid_matrix) — entries
-    # that feed BOTH the assignment and the probe step collect once and
-    # pass it down, instead of paying two identical collect jobs per
-    # entry (guide §1.2 "don't compute things you throw away"). With a
-    # pre-collected default-stride matrix no centroid FRAME is needed at
-    # all (cell ids are corpus ids — long).
+    # ``cent_np``: a pre-collected (ids, matrix, norms) triplet
+    # (collect_stride_centroids / kmeans_centroid_matrix) — entries that
+    # feed BOTH the assignment and the probe step collect once and pass
+    # it down. Without a centroid FRAME the cell ids are long (corpus
+    # ids, or the long cids of centroid_frame).
     if centroids is None and cent_np is None:
         centroids = default_stride_centroids(corpus, id_col, vec_col)
     vecs = canonical_vectors(corpus, id_col, vec_col)
@@ -2203,8 +2157,8 @@ def probe_cells(
 ) -> DataFrame:
     """(qid, cell) probe set: each query's ``nprobe`` nearest centroids
     under (cosine DESC, cid ASC) — the IVF probe-selection step as a
-    blocked GEMM, the same treatment ``assign_cells`` got in round 10
-    (probe selection IS a top-P generalization of the argmax).
+    blocked GEMM, the same treatment ``assign_cells`` gets (probe
+    selection IS a top-P generalization of the argmax).
 
     The former plan evaluated one interpreted HOF dot per (query,
     centroid) pair and ranked them in a window — queries x K ~ n^1.5/97
@@ -2250,7 +2204,7 @@ def probe_cells(
         centroids.schema["cid"].dataType if centroids is not None
         else LongType()
     )
-    # shared pre-collected matrix, same contract as assign_cells (r16)
+    # shared pre-collected matrix, same contract as assign_cells
     if cent_np is None:
         cent_np = _collect_centroid_matrix(centroids)
     return _gemm_topp_frame(queries, cent_np, cid_type, nprobe)
@@ -2459,8 +2413,8 @@ def _gemm_partial_means(vecs: DataFrame, bc) -> DataFrame:
         ]
     )
     # pass only the column the kernel touches across the Python boundary
-    # (guide §4.1) — the caller's frame also carries nid (and, r16, the
-    # multiplicity column used by the fused init job)
+    # (guide §4.1) — the caller's frame also carries nid and the
+    # multiplicity column used by the fused init job
     vecs = vecs.select("__v")
     block = ASSIGN_CENT_BLOCK
 
@@ -2563,32 +2517,6 @@ def assign_cells_fold(
     )
 
 
-def assigned_with_vectors(
-    corpus: DataFrame,
-    cells: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Rebuild the ``assign_cells`` output frame from a MATERIALIZED
-    ``(nid, cell)`` table: join the canonical corpus vectors back on id
-    and re-bind the clamped norm Spark-side — bitwise what assign_cells
-    emits for the same cells.
-
-    This is how registry entries consume a persisted IVF index: the
-    assignment is computed once (GEMM), written as (nid, cell) — the
-    inverted file, cell being its natural partition key — and BOTH the
-    Spark search and the DuckDB oracle derive from those same bytes, so
-    a BLAS near-tie argmax flip between engines cannot split them (the
-    materialized-assignment treatment; see assign_cells DETERMINISM).
-    """
-    vecs = canonical_vectors(corpus, id_col, vec_col).withColumn(
-        "__nv", F.expr(VEC.norm_clamped("__v", "spark"))
-    )
-    return vecs.join(cells.select("nid", "cell"), "nid").select(
-        "nid", "__v", "__nv", "cell"
-    )
-
-
 def ivf_topk(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -2621,19 +2549,18 @@ def ivf_topk(
     so callers can swap exact for approximate.
 
     ``assigned`` lets callers inject a pre-built (materialized) inverted
-    file — the output of ``assign_cells`` written to parquet and rebuilt
-    via ``assigned_with_vectors`` — so the index is computed once, the
-    search reads the persisted cells, and the oracle verifies against the
-    SAME bytes (see assign_cells DETERMINISM). Default: assign in-flight.
+    file — the (nid, __v, __nv, cell) output of ``assign_cells`` written
+    to parquet and read back — so the index is computed once, the search
+    reads the persisted cells, and the oracle verifies against the SAME
+    bytes (see assign_cells DETERMINISM). Default: assign in-flight.
     """
     corpus = ensure_parallelism(corpus)
     # resolve the default centroid set ONCE so the adaptive-stride
     # count() job runs once and the probe cells / assignment cells come
-    # from the same frame (same subplan -> AQE ReusedExchange). Round 15:
-    # resolution is SKIPPED when both the assignment and the probe table
+    # from the same frame (same subplan -> AQE ReusedExchange).
+    # Resolution is SKIPPED when both the assignment and the probe table
     # arrive materialized — the search below never touches centroids
-    # then, and the eager default ran a wasted count() job per entry
-    # (measured ~0.1 s at sf0.1, one per IVF registry entry).
+    # then, and the eager default would run a wasted count() job.
     if centroids is None and (assigned is None or probes is None):
         centroids = default_stride_centroids(corpus, id_col, vec_col)
     # GEMM assignment shared with semdedup_dropped — see assign_cells for
@@ -2679,23 +2606,31 @@ def ivf_topk(
             .filter(F.col("__rn") <= IVF_NPROBE)
             .select("qid", "__q", "__nq", F.col("cid").alias("cell"))
         )
-    # Search: per-cell blocked GEMM with in-kernel per-query top-k
-    # partials (see _make_block_topk). The former shape — broadcast
-    # probes joined to the assignment, one interpreted HOF dot per
-    # (query, member) pair, then a corpus-wide window — evaluated
-    # queries x nprobe x |cell| interpreted 64-dim dots (~60M at the
-    # x300 probe point; measured alpha(100->300) = 1.77, 7.5 -> 52.4 s).
-    # Now each side rank-blocks within its cell, the block join ships
-    # bounded payloads, every dot is BLAS dgemm, and the final window
-    # ranks only ~queries x nprobe x k x blocks candidate rows. The
-    # assignment does shuffle by cell here (it did not under the
-    # broadcast join) — at scale that is the materialized inverted
-    # file's natural partitioning, and the shuffle is linear in the
-    # PROBED cells only (the join drops unprobed cells' blocks).
-    qb = _cell_rank_blocks(
-        probes.select("cell", "qid", "__q"), "qid", "__q", "__qids", "__qflat"
-    )
-    mb = _cell_rank_blocks(assigned, "nid", "__v", "__nids", "__nflat")
+    return _ivf_block_search(probes, assigned, k)
+
+
+def _ivf_block_search(
+    probe_q: DataFrame, members: DataFrame, k: int
+) -> DataFrame:
+    """The IVF search kernel shared by ``ivf_topk`` and
+    ``ivf_topk_quantized``: top-``k`` members per query by cosine over
+    the probed cells. ``probe_q`` carries (cell, qid, __q), one row per
+    (query, probed cell); ``members`` carries (cell, nid, __v); other
+    columns are ignored. Returns (qid, nid, sim, rank).
+
+    Per-cell blocked GEMM with in-kernel per-query top-k partials (see
+    _make_block_topk): each side rank-blocks within its cell, the block
+    join ships bounded payloads, every dot is BLAS dgemm, and the final
+    window ranks only ~queries x nprobe x k x blocks candidate rows. A
+    per-pair plan (one interpreted HOF dot per (query, member) pair,
+    then a corpus-wide window) evaluates queries x nprobe x |cell|
+    interpreted 64-dim dots — ~60M at the x300 probe point, where it
+    measured alpha(100->300) = 1.77. The members shuffle by cell here —
+    at scale that is the materialized inverted file's natural
+    partitioning, and the shuffle is linear in the PROBED cells only
+    (the join drops unprobed cells' blocks)."""
+    qb = _cell_rank_blocks(probe_q, "qid", "__q", "__qids", "__qflat")
+    mb = _cell_rank_blocks(members, "nid", "__v", "__nids", "__nflat")
     cand = (
         qb.drop("__blk")
         .join(mb.drop("__blk"), "cell")
@@ -2812,9 +2747,9 @@ def ivf_topk_quantized(
     quantizer stays float, IVF-PQ style), but everything the SEARCH
     touches — member vectors AND query vectors — is the quantized index,
     so the resident working set is 1/8th the float corpus and the sim is
-    the same integer-dot cosine ``quantized_topk`` defines. The kernel
-    path is byte-for-byte the float IVF one (``_cell_rank_blocks`` +
-    ``_make_block_topk``): int8 values cast to double are exact in BLAS
+    the same integer-dot cosine ``quantized_topk`` defines. The search
+    is the float IVF kernel (``_ivf_block_search``) over the dequantized
+    vectors: int8 values cast to double are exact in BLAS
     GEMM (dim 64, |q| <= 127 -> dots < 2^21), so no separate quantized
     kernel exists to drift.
 
@@ -2846,34 +2781,13 @@ def ivf_topk_quantized(
             centroids=centroids,
             queries_from=dq.select("nid", F.col("__qd").alias("__v")),
         )
-    pq = probes.select("qid", "cell").join(
-        dq.select(F.col("nid").alias("qid"), F.col("__qd").alias("__q")),
-        "qid",
-    )
-    qb = _cell_rank_blocks(
-        pq.select("cell", "qid", "__q"), "qid", "__q", "__qids", "__qflat"
-    )
-    mb = _cell_rank_blocks(
-        dq.select("cell", "nid", F.col("__qd").alias("__nv")),
-        "nid",
-        "__nv",
-        "__nids",
-        "__nflat",
-    )
-    cand = (
-        qb.drop("__blk")
-        .join(mb.drop("__blk"), "cell")
-        .mapInPandas(
-            _make_block_topk(k), schema="qid long, nid long, sim double"
-        )
-    )
-    w_top = Window.partitionBy("qid").orderBy(
-        F.col("sim").desc(), F.col("nid").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w_top))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "sim", "rank")
+    return _ivf_block_search(
+        probes.select("qid", "cell").join(
+            dq.select(F.col("nid").alias("qid"), F.col("__qd").alias("__q")),
+            "qid",
+        ),
+        dq.select("cell", "nid", F.col("__qd").alias("__v")),
+        k,
     )
 
 
@@ -2957,7 +2871,7 @@ def semdedup_dropped(
     # np.stack — pass dim to exclude them before assignment so neither
     # the centroid stride subset nor any block can contain one (opt-in:
     # the blocks themselves are dim-agnostic). ``assigned`` injects a
-    # materialized index (assigned_with_vectors) like ivf_topk's.
+    # materialized (nid, __v, __nv, cell) index like ivf_topk's.
     if dim is not None:
         corpus = well_formed_vectors(corpus, vec_col, dim)
     if assigned is None:

@@ -44,7 +44,7 @@ from polario_spark.operators.multimodal import (
     frame_sample,
     with_binary_payload,
 )
-from polario_spark.plans.parallelism import ensure_parallelism
+from polario_spark.plans.parallelism import ensure_parallelism, run_concurrently
 from polario_spark.sources.tables import footer_rows, load_table
 from polario_spark.streaming import events as streaming_events
 from polario_spark.streaming.events import hourly_counts
@@ -2318,19 +2318,18 @@ def dedup_embedding_cosine_lsh_sized(spark: SparkSession, sf_dir: str) -> DataFr
 
 
 #: Fixed on-disk home for each entry's materialized GEMM cell assignment
-#: (the inverted file): the Spark query writes (nid, cell) here and the
-#: DuckDB oracle reads the SAME bytes back, so the BLAS argmax is computed
-#: exactly once and a near-tie can never split the engines — the same
-#: treatment the k-means centroid table gets (see assign_cells
+#: (the inverted file): the Spark query writes (nid, __v, cell) here and
+#: the DuckDB oracle reads the SAME bytes back, so the BLAS argmax is
+#: computed exactly once and a near-tie can never split the engines — the
+#: same treatment the k-means centroid table gets (see assign_cells
 #: DETERMINISM in operators/similarity.py). One path per (entry, corpus):
 #: the driver may interleave entries, and each oracle must see the bytes
 #: ITS Spark twin wrote. These constants bake the GATE corpus into the
 #: oracle strings at import time; the query functions recompute the same
 #: path from their runtime ``sf_dir`` (pinned equal for the gate corpus
-#: by tests/test_workdir.py), so a pytest run at sf0.001 and a gate
-#: mirror at sf0.01 in concurrent PROCESSES write disjoint dirs — the
-#: round-13-reproduced overwrite-then-read race between corpora is gone
-#: by construction (workdir.stable_work_path).
+#: by tests/test_workdir.py), so runs over different corpora in
+#: concurrent PROCESSES write disjoint dirs and an overwrite-then-read
+#: race between corpora cannot happen (workdir.stable_work_path).
 _SEMDEDUP_ASSIGN_PATH = stable_work_path("semdedup_assign", _GATE_SF_DIR)
 _IVF_ASSIGN_PATH = stable_work_path("ivf_stride_assign", _GATE_SF_DIR)
 _IVF_KM_ASSIGN_PATH = stable_work_path("ivf_kmeans_assign", _GATE_SF_DIR)
@@ -2338,15 +2337,17 @@ _IVF_PROBES_PATH = stable_work_path("ivf_stride_probes", _GATE_SF_DIR)
 _IVF_KM_PROBES_PATH = stable_work_path("ivf_kmeans_probes", _GATE_SF_DIR)
 
 
-def _materialized_assignment(
-    emb: DataFrame,
-    path: str,
-    centroids: "DataFrame | None" = None,
-    cent_np=None,
-) -> DataFrame:
-    """GEMM-assign cells, persist the (nid, __v, cell) inverted file to
-    ``path``, and rebuild the search-side frame from the persisted bytes
-    — shared by the three IVF-family entries.
+def _persist(df: DataFrame, path: str) -> DataFrame:
+    """Write ``df`` as parquet to the stable directory ``path`` and return
+    the frame read back from those bytes — what the oracle reads too."""
+    df.write.mode("overwrite").parquet(prepare_stable_dir(path))
+    return df.sparkSession.read.parquet(path)
+
+
+def _materialized_assignment(emb: DataFrame, path: str, cent_np) -> DataFrame:
+    """GEMM-assign cells under the centroid triplet ``cent_np``, persist
+    the (nid, __v, cell) inverted file to ``path``, and rebuild the
+    search-side frame from the persisted bytes.
 
     The index stores the VECTORS, not just (nid, cell): that is what an
     IVF index is (the cells hold their members' vectors), it lets the
@@ -2355,59 +2356,60 @@ def _materialized_assignment(
     bytes. ``__nv`` is re-bound Spark-side with the same clamped-fold
     expression assign_cells emits, so downstream sims are bitwise what
     the in-flight frame would produce."""
-    spark = emb.sparkSession
     cells = similarity.assign_cells(
-        emb, "vec_id", "embedding", centroids=centroids, cent_np=cent_np
+        emb, "vec_id", "embedding", cent_np=cent_np
     ).select("nid", "__v", "cell")
-    cells.write.mode("overwrite").parquet(prepare_stable_dir(path))
     return (
-        spark.read.parquet(path)
+        _persist(cells, path)
         .withColumn("__nv", F.expr(VEC.norm_clamped("__v", "spark")))
         .select("nid", "__v", "__nv", "cell")
     )
 
 
-def _materialized_probes(
-    emb: DataFrame,
-    assigned: "DataFrame | None",
-    path: str,
-    centroids: "DataFrame | None" = None,
-    cent_np=None,
-) -> DataFrame:
+def _materialized_probes(emb: DataFrame, path: str, cent_np) -> DataFrame:
     """GEMM-select each query's nprobe nearest cells, persist the
     (qid, cell) probe table to ``path``, and hand back the persisted
     frame — the probe-selection twin of :func:`_materialized_assignment`
-    (round 11: probe selection was the last interpreted n^1.5 term in
-    the IVF family; the GEMM changes float summation order, so both
-    engines must read the same probe bytes — probe_cells DETERMINISM).
+    (the GEMM changes float summation order, so both engines must read
+    the same probe bytes — probe_cells DETERMINISM).
 
-    ``assigned=None`` (round 16): source the query vectors from the
-    canonical corpus frame instead of the materialized assignment. The
-    bytes are identical BY CONSTRUCTION — the index's ``__v`` IS the
-    canonical ``max(__v)`` aggregate (an exact, order-independent
-    lexicographic max, no float arithmetic) and parquet round-trips
-    float64 bit-exactly — so the probe GEMM consumes the same query
-    vectors either way (row-identity asserted in the r16 A/B and the
-    oracle gate). What it buys: the probe job no longer waits on the
-    assignment write+read, so the two materializations run as
-    INDEPENDENT jobs from a 2-thread pool (guide §2.6), the probe job's
-    corpus re-scan back-filling the assignment write's task tail. At
-    scale the probe-side query filter (nid % stride) pushes through the
-    canonical groupBy to the scan, so the extra exchange carries only
-    the ~1% query subset."""
-    spark = emb.sparkSession
-    probes = similarity.probe_cells(
-        emb,
-        "vec_id",
-        "embedding",
-        centroids=centroids,
-        queries_from=(
-            assigned.select("nid", "__v") if assigned is not None else None
-        ),
-        cent_np=cent_np,
+    The query vectors come from the canonical corpus frame, not from the
+    materialized assignment. The bytes are identical BY CONSTRUCTION —
+    the index's ``__v`` IS the canonical ``max(__v)`` aggregate (an
+    exact, order-independent lexicographic max, no float arithmetic) and
+    parquet round-trips float64 bit-exactly — so the probe job does not
+    wait on the assignment write and the two run as independent jobs
+    (``run_concurrently``). At scale the probe-side query filter
+    (nid % stride) pushes through the canonical groupBy to the scan, so
+    the extra exchange carries only the ~1% query subset."""
+    return _persist(
+        similarity.probe_cells(emb, "vec_id", "embedding", cent_np=cent_np),
+        path,
     )
-    probes.write.mode("overwrite").parquet(prepare_stable_dir(path))
-    return spark.read.parquet(path)
+
+
+def _float_ivf_topk(
+    emb: DataFrame, sf_dir: str, kind: str, cent_np, *also: Callable
+) -> DataFrame:
+    """Top-5 IVF search over the float inverted file of ``emb`` under the
+    centroid triplet ``cent_np`` — the index builder shared by the
+    stride and Lloyd entries. The assignment and the probe table persist
+    to the ``ivf_{kind}_assign`` / ``ivf_{kind}_probes`` stable paths as
+    independent jobs, concurrently with the ``also`` thunks, and the
+    search reads both back (see _materialized_probes for the corpus-fed
+    probe-query bit-identity argument)."""
+    *_, assigned, probes = run_concurrently(
+        *also,
+        lambda: _materialized_assignment(
+            emb, stable_work_path(f"ivf_{kind}_assign", sf_dir), cent_np
+        ),
+        lambda: _materialized_probes(
+            emb, stable_work_path(f"ivf_{kind}_probes", sf_dir), cent_np
+        ),
+    )
+    return similarity.ivf_topk(
+        emb, "vec_id", "embedding", 5, assigned=assigned, probes=probes
+    ).orderBy("qid", "rank")
 
 
 def _probes_oracle(path: str) -> str:
@@ -2454,20 +2456,18 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster quality) — real pipelines run the latter when embeddings
     already exist for other reasons.
 
-    Round 10: the cell assignment is the BLAS GEMM path, materialized to
-    a stable parquet index both engines verify against (see
-    _SEMDEDUP_ASSIGN_PATH)."""
+    The cell assignment is the BLAS GEMM path under the stride centroids
+    (one fused count + collect job, see collect_stride_centroids),
+    materialized to a stable parquet index both engines verify against
+    (see _SEMDEDUP_ASSIGN_PATH)."""
     emb = similarity.well_formed_vectors(
         _t(spark, sf_dir, "embeddings"), "embedding", 64
     )
-    # Round 16 (opt): fused stride-count + centroid collect (one job
-    # instead of two — see collect_stride_centroids); the assignment was
-    # resolving its own default inside assign_cells.
     cent_np = similarity.collect_stride_centroids(
         emb, "vec_id", "embedding", n_hint=_footer_rows(sf_dir, "embeddings")
     )
     assigned = _materialized_assignment(
-        emb, stable_work_path("semdedup_assign", sf_dir), cent_np=cent_np
+        emb, stable_work_path("semdedup_assign", sf_dir), cent_np
     )
     return similarity.semdedup_dropped(emb, assigned=assigned).orderBy(
         "vec_id"
@@ -2491,44 +2491,22 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-bucketed approximate top-5 cosine neighbors — the scale path
     complement to ann_topk_cosine's exact scan. Malformed vectors shed at
-    the scan both sides (round-8 probe): a NaN assignment cosine would
-    place the vector in an engine-dependent cell. Round 10: GEMM cell
-    assignment materialized to a stable parquet index both engines verify
-    against (_IVF_ASSIGN_PATH). Round 11: the probe table gets the same
-    GEMM + materialization treatment (_IVF_PROBES_PATH), and the search
-    itself is a per-cell blocked GEMM (ivf_topk). Recall rides nprobe
-    (~nprobe/K on unclustered data; measured curve 0.248@2 -> 0.943@24,
-    see similarity.IVF_NPROBE / SCALE.md) — size it before deploying."""
+    the scan both sides: a NaN assignment cosine would place the vector
+    in an engine-dependent cell. The stride centroid matrix is collected
+    once (one fused count + collect job, see collect_stride_centroids)
+    and shared by the GEMM cell assignment and the GEMM probe selection;
+    both are materialized to stable parquet tables both engines verify
+    against (_IVF_ASSIGN_PATH, _IVF_PROBES_PATH), and the search itself
+    is a per-cell blocked GEMM (ivf_topk). Recall rides nprobe (~nprobe/K
+    on unclustered data; measured curve 0.248@2 -> 0.943@24, see
+    similarity.IVF_NPROBE / SCALE.md) — size it before deploying."""
     emb = similarity.well_formed_vectors(
         _t(spark, sf_dir, "embeddings"), "embedding", 64
     )
-    # Round 16 (opt, extends the r15 shared-centroid-frame fix): the
-    # stride count() + centroid collect() pair fuses
-    # into ONE job (collect_stride_centroids, footer-rows hint), the
-    # matrix is driver-collected ONCE and passed to both consumers (was
-    # one collect job each), and the two index writes — assignment and
-    # probes — run as independent jobs from a 2-thread pool (§2.6): the
-    # probe job sources its query vectors from the canonical corpus
-    # frame, which is bit-identical to the materialized assignment's
-    # __v (see _materialized_probes).
     cent_np = similarity.collect_stride_centroids(
         emb, "vec_id", "embedding", n_hint=_footer_rows(sf_dir, "embeddings")
     )
-    assign_path = stable_work_path("ivf_stride_assign", sf_dir)
-    probes_path = stable_work_path("ivf_stride_probes", sf_dir)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_assigned = pool.submit(
-            _materialized_assignment, emb, assign_path, cent_np=cent_np
-        )
-        f_probes = pool.submit(
-            _materialized_probes, emb, None, probes_path, cent_np=cent_np
-        )
-        assigned, probes = f_assigned.result(), f_probes.result()
-    return similarity.ivf_topk(
-        emb, "vec_id", "embedding", 5, assigned=assigned, probes=probes
-    ).orderBy("qid", "rank")
+    return _float_ivf_topk(emb, sf_dir, "stride", cent_np)
 
 
 @_register(
@@ -2600,56 +2578,39 @@ def ann_ivf_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = similarity.well_formed_vectors(
         _t(spark, sf_dir, "embeddings"), "embedding", 64
     )
-    q_assign_path = stable_work_path("ivf_quant_assign", sf_dir)
-    q_probes_path = stable_work_path("ivf_quant_probes", sf_dir)
-    # Round 16 (opt): the stride count() + centroid collect() fuse into
-    # ONE job shared by assignment + probe selection (was a count plus
-    # one collect job per consumer), and — like the float entry — the
-    # two index writes overlap from a 2-thread pool: the probe step's
-    # query vectors are dequant(quantize(canonical __v)), PURE
-    # deterministic column expressions of the canonical corpus (the
-    # assignment GEMM computes only the CELL, which the query side
-    # never reads), so computing them in-flight is bit-identical to
-    # reading them back from the materialized index (int8 survives
-    # parquet exactly; the quantize exprs are shared via
-    # quantized_index).
+    # One stride centroid matrix (one fused count + collect job) feeds
+    # the assignment and the probe selection, and the two index writes
+    # are independent jobs: the probe step's query vectors are
+    # dequant(quantize(canonical __v)), PURE deterministic column
+    # expressions of the canonical corpus (the assignment GEMM computes
+    # only the CELL, which the query side never reads), so computing
+    # them in-flight is bit-identical to reading them back from the
+    # materialized index (int8 survives parquet exactly; the quantize
+    # exprs are shared via quantized_index).
     cent_np = similarity.collect_stride_centroids(
         emb, "vec_id", "embedding", n_hint=_footer_rows(sf_dir, "embeddings")
     )
-
-    def _write_qidx() -> DataFrame:
-        qidx = similarity.quantized_index(
-            similarity.assign_cells(
-                emb, "vec_id", "embedding", cent_np=cent_np
-            ).select("nid", "__v", "cell")
-        )
-        qidx.write.mode("overwrite").parquet(
-            prepare_stable_dir(q_assign_path)
-        )
-        return spark.read.parquet(q_assign_path)
-
-    def _write_probes() -> DataFrame:
-        q_inflight = similarity.quantized_index(
-            similarity.canonical_vectors(emb, "vec_id", "embedding")
-            .withColumn("cell", F.lit(None).cast("long"))
-        ).select(
-            "nid", F.expr(similarity.dequant_expr("__qv")).alias("__v")
-        )
-        probes = similarity.probe_cells(
-            emb, "vec_id", "embedding",
-            queries_from=q_inflight, cent_np=cent_np,
-        )
-        probes.write.mode("overwrite").parquet(
-            prepare_stable_dir(q_probes_path)
-        )
-        return spark.read.parquet(q_probes_path)
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_assigned = pool.submit(_write_qidx)
-        f_probes = pool.submit(_write_probes)
-        assigned_q, probes = f_assigned.result(), f_probes.result()
+    q_queries = similarity.quantized_index(
+        similarity.canonical_vectors(emb, "vec_id", "embedding")
+        .withColumn("cell", F.lit(None).cast("long"))
+    ).select("nid", F.expr(similarity.dequant_expr("__qv")).alias("__v"))
+    assigned_q, probes = run_concurrently(
+        lambda: _persist(
+            similarity.quantized_index(
+                similarity.assign_cells(
+                    emb, "vec_id", "embedding", cent_np=cent_np
+                ).select("nid", "__v", "cell")
+            ),
+            stable_work_path("ivf_quant_assign", sf_dir),
+        ),
+        lambda: _persist(
+            similarity.probe_cells(
+                emb, "vec_id", "embedding",
+                queries_from=q_queries, cent_np=cent_np,
+            ),
+            stable_work_path("ivf_quant_probes", sf_dir),
+        ),
+    )
     return similarity.ivf_topk_quantized(
         emb, "vec_id", "embedding", 5, assigned_q=assigned_q, probes=probes
     ).orderBy("qid", "rank")
@@ -2683,80 +2644,48 @@ _KMEANS_CENT_PATH = stable_work_path("kmeans_centroids", _GATE_SF_DIR)
 def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-5 with Lloyd-refined centroids: three k-means rounds
     (stride init, no RNG, GEMM assignment per round) tighten the cells
-    before the same broadcast-probe search. The refined centroids are
-    materialized to a fixed parquet path and read back before searching,
-    so the search and the oracle consume bitwise-identical centroid
-    values, and (round 10) the final GEMM cell assignment is materialized
-    the same way (_IVF_KM_ASSIGN_PATH) — the hash gate covers probe +
-    search end-to-end, while the refinement itself is pinned by pytest
-    (determinism in-session, recall >= the stride path;
-    tests/test_operators.py). Malformed vectors shed at the scan both
-    sides (round-8 probe) — a NaN component would poison the Lloyd mean
-    of its whole cell. Recall rides nprobe (~nprobe/K on unclustered
-    data; measured curve 0.248@2 -> 0.943@24, see similarity.IVF_NPROBE
-    / SCALE.md) — size it before deploying."""
+    before the same search as ann_ivf_topk. The refined centroids are
+    materialized to a fixed parquet path, and so are the GEMM cell
+    assignment and the probe table (_IVF_KM_ASSIGN_PATH,
+    _IVF_KM_PROBES_PATH) — the hash gate covers probe + search
+    end-to-end over the bytes the Spark side used, while the refinement
+    itself is pinned by pytest (determinism in-session, recall >= the
+    stride path; tests/test_operators.py). Malformed vectors shed at the
+    scan both sides — a NaN component would poison the Lloyd mean of its
+    whole cell. Recall rides nprobe (~nprobe/K on unclustered data;
+    measured curve 0.248@2 -> 0.943@24, see similarity.IVF_NPROBE /
+    SCALE.md) — size it before deploying."""
     emb = similarity.well_formed_vectors(
         _t(spark, sf_dir, "embeddings"), "embedding", 64
     )
-    cent_path = stable_work_path("kmeans_centroids", sf_dir)
-    # n_hint (r16): fuses the init-stride count into the init-centroid
-    # collect job — see kmeans_centroids / collect_stride_centroids.
-    # return_matrix (r16b): the Lloyd loop's final means already live on
-    # the driver as the (ids, matrix, norms) triplet — take them directly
-    # instead of re-collecting the frame (was one extra job +
-    # Python-worker round-trip per entry; bit-identity pinned by
+    # The Lloyd loop's final means already live on the driver as the
+    # (ids, matrix, norms) triplet the assignment and probe GEMMs take;
+    # the centroid frame is built from that triplet, so the table the
+    # oracle reads holds the same float64 values (exact round-trip,
     # tests/test_operators.py::test_kmeans_return_matrix_matches_collect).
-    cent, cent_np = similarity.kmeans_centroids(
+    cent_np = similarity.kmeans_centroid_matrix(
         emb, "vec_id", "embedding", iters=3,
         n_hint=_footer_rows(sf_dir, "embeddings"),
-        return_matrix=True,
     )
+    cent_path = stable_work_path("kmeans_centroids", sf_dir)
 
     def _write_cent() -> None:
         # repartition(1): the centroid table is driver-sized by
-        # construction (K ~ sqrt(n) rows; the Lloyd loop literally held
-        # it as one numpy matrix on the driver), so parallelize()'s
-        # default slicing would write one near-empty file per core —
-        # pure commit overhead at any scale (guide §6 small-files; round
-        # 15 opt). repartition, NOT coalesce: coalesce(1) funnels all of
-        # createDataFrame's pickled slices through ONE task's sequential
-        # Python-worker round-trips (measured 4+ s for 45 rows); the
-        # repartition shuffle keeps the Python side parallel and the
-        # single write task pure-JVM (0.4 s).
-        cent.repartition(1).write.mode("overwrite").parquet(
-            prepare_stable_dir(cent_path)
-        )
+        # construction (K ~ sqrt(n) rows), so parallelize()'s default
+        # slicing would write one near-empty file per core — pure commit
+        # overhead at any scale. repartition, NOT coalesce: coalesce(1)
+        # funnels all of createDataFrame's pickled slices through ONE
+        # task's sequential Python-worker round-trips (measured 4+ s for
+        # 45 rows); the repartition shuffle keeps the Python side
+        # parallel and the single write task pure-JVM (0.4 s).
+        similarity.centroid_frame(spark, cent_np).repartition(1).write.mode(
+            "overwrite"
+        ).parquet(prepare_stable_dir(cent_path))
 
-    # Round 16 (opt): ONE centroid matrix shared by assignment + probes
-    # (was one collect job each), taken from the Lloyd loop's own final
-    # triplet (see return_matrix above); the oracle still reads the
-    # materialized bytes, which round-trip float64 exactly. The THREE
-    # independent jobs — the tiny centroid-table write (nothing on the
-    # Spark side reads it back; only the oracle consumes the bytes) and
-    # the two index writes — overlap from a thread pool (§2.6), same
-    # restructure as ann_ivf_topk (see _materialized_probes for the
-    # corpus-fed probe-query bit-identity argument). FIFO scheduling
-    # back-fills the big writes' tails with the small one.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_cent = pool.submit(_write_cent)
-        f_assigned = pool.submit(
-            _materialized_assignment, emb,
-            stable_work_path("ivf_kmeans_assign", sf_dir),
-            centroids=cent, cent_np=cent_np,
-        )
-        f_probes = pool.submit(
-            _materialized_probes, emb, None,
-            stable_work_path("ivf_kmeans_probes", sf_dir),
-            centroids=cent, cent_np=cent_np,
-        )
-        f_cent.result()
-        assigned, probes = f_assigned.result(), f_probes.result()
-    return similarity.ivf_topk(
-        emb, "vec_id", "embedding", 5, centroids=cent, assigned=assigned,
-        probes=probes,
-    ).orderBy("qid", "rank")
+    # The centroid-table write (nothing on the Spark side reads it back;
+    # only the oracle consumes the bytes) is a third independent job
+    # beside the two index writes.
+    return _float_ivf_topk(emb, sf_dir, "kmeans", cent_np, _write_cent)
 
 
 @_register(
@@ -3275,13 +3204,10 @@ def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders = _t(spark, sf_dir, "orders").filter(
             F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp")
         ).select("o_orderkey", "o_orderstatus")
-        # The two bucketed writes are independent jobs; submitting them
-        # from a 2-thread pool lets the second job's tasks back-fill the
-        # executor slots the first job's tail leaves idle (guide §2.6).
-        # Interleaved A/B at sf0.1: 1.71 -> 1.41 s, identical results
-        # (round 15 opt).
-        from concurrent.futures import ThreadPoolExecutor
-
+        # The two bucketed writes are independent jobs; running them
+        # concurrently lets the second job's tasks back-fill the
+        # executor slots the first job's tail leaves idle (guide §2.6;
+        # interleaved A/B at sf0.1: 1.71 -> 1.41 s, identical results).
         def _write_li():
             li.write.bucketBy(8, "l_orderkey").sortBy("l_orderkey").mode(
                 "overwrite"
@@ -3292,9 +3218,7 @@ def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "overwrite"
             ).saveAsTable(f"{db}.orders_b")
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            for fut in [pool.submit(_write_li), pool.submit(_write_orders)]:
-                fut.result()
+        run_concurrently(_write_li, _write_orders)
         lb = spark.table(f"{db}.lineitem_b")
         ob = spark.table(f"{db}.orders_b")
         return (
@@ -5627,14 +5551,12 @@ def federated_three_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst treats every source uniformly (pushdown/pruning per format
     capability), so heterogeneous lakes don't force a conversion pass;
     the join strategy (broadcast dims, fact stationary) is format-blind."""
-    from polario_spark.plans.parallelism import ensure_parallelism
-
     tmp = work_dir(spark, "federated_three_formats")
 
-    # parallel write inputs (round 15 opt) — see csv_roundtrip — and the
-    # two independent sink writes overlap from a 2-thread pool so the
-    # second job back-fills the first's task tail (guide §2.6;
-    # interleaved A/B 1.59 -> 1.31 s, identical results)
+    # parallel write inputs — see csv_roundtrip — and the two independent
+    # sink writes run concurrently so the second job back-fills the
+    # first's task tail (guide §2.6; interleaved A/B 1.59 -> 1.31 s,
+    # identical results)
     def _write_customer():
         ensure_parallelism(
             _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
@@ -5645,12 +5567,8 @@ def federated_three_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
             _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
         ).write.mode("overwrite").option("header", "true").csv(f"{tmp}/orders")
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for fut in [pool.submit(_write_customer), pool.submit(_write_orders)]:
-            fut.result()
-    # explicit schema (round 15 opt): schema inference is a FULL extra
+    run_concurrently(_write_customer, _write_orders)
+    # explicit schema: schema inference is a FULL extra
     # pass over the JSON files before the query's own scan — at bench
     # scale a wash (A/B 1.41 vs 1.39 s), at 100 TB a whole corpus read.
     # The fields are this entry's own write, so the schema is known;

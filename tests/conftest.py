@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import importlib.util
+import pathlib
+
 import pytest
 
 from polario_spark.session import get_spark
@@ -9,6 +12,18 @@ from polario_spark.session import get_spark
 def spark():
     spark = get_spark("polario_spark_tests", shuffle_partitions=4)
     yield spark
+
+
+@pytest.fixture(scope="session")
+def oracle_mismatch():
+    """``tools/check_oracles.py``'s comparator: ``mismatch(schema, rows,
+    oracle_arrow_table)`` returns why a Spark result differs from its
+    DuckDB oracle (columns, Arrow types, row count, values), or None."""
+    path = pathlib.Path(__file__).parent.parent / "tools" / "check_oracles.py"
+    spec = importlib.util.spec_from_file_location("check_oracles", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod.mismatch
 
 
 @pytest.fixture()

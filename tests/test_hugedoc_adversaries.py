@@ -27,7 +27,6 @@ column agree with entries that recompute.
 
 from __future__ import annotations
 
-import math
 import os
 
 import duckdb
@@ -97,29 +96,18 @@ def adv_duck(adv_dir):
     return con
 
 
-def _normalize(rows, columns):
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-
-    def norm(v):
-        if isinstance(v, float):
-            return "nan" if math.isnan(v) else f"{v:.6f}"
-        return str(v)
-
-    return sorted(tuple(norm(r[i]) for i in order) for r in rows)
-
-
 @pytest.mark.parametrize("name", AFFECTED)
-def test_text_entries_survive_huge_documents(spark, adv_dir, adv_duck, name):
+def test_text_entries_survive_huge_documents(
+    spark, adv_dir, adv_duck, oracle_mismatch, name
+):
     fn = entry_mod.queries()[name]
-    # round 14: stable artifacts are corpus-keyed; rebind the baked
-    # gate-corpus path literals to where THIS corpus's run writes
+    # stable artifacts are corpus-keyed; rebind the baked gate-corpus
+    # path literals to where THIS corpus's run writes
     oracle = rebind_stable_paths(
         entry_mod.oracle_sql()[name], _GATE_SF_DIR, adv_dir
     )
     sdf = fn(spark, adv_dir)
-    rel = adv_duck.sql(oracle)
-    assert sorted(sdf.columns) == sorted(rel.columns)
-    srows = _normalize([tuple(r) for r in sdf.collect()], sdf.columns)
-    drows = _normalize(rel.fetchall(), list(rel.columns))
-    assert len(srows) == len(drows), name
-    assert srows == drows, name
+    problem = oracle_mismatch(
+        sdf.schema, sdf.collect(), adv_duck.sql(oracle).arrow()
+    )
+    assert problem is None, f"{name}: {problem}"

@@ -1232,9 +1232,10 @@ def test_kmeans_centroids_fused_init_matches_counted_path(spark):
 
 
 def test_kmeans_return_matrix_matches_collect(spark):
-    """``return_matrix=True`` (r16) hands back the Lloyd loop's own final
+    """``kmeans_centroid_matrix`` hands back the Lloyd loop's own final
     (ids, matrix, norms) triplet; it must be bitwise what
-    ``_collect_centroid_matrix`` rebuilds from the returned frame —
+    ``_collect_centroid_matrix`` rebuilds from ``kmeans_centroids``'
+    frame (which ``centroid_frame`` builds from that triplet) —
     including the iters=0 (init-set) path and the empty-corpus path."""
     import numpy as np
 
@@ -1254,17 +1255,17 @@ def test_kmeans_return_matrix_matches_collect(spark):
         assert np.array_equal(g_norms, w_norms)
 
     for iters in (0, 2):
-        frame, triplet = similarity.kmeans_centroids(
-            emb, iters=iters, n_hint=300, return_matrix=True
+        triplet = similarity.kmeans_centroid_matrix(
+            emb, iters=iters, n_hint=300
         )
+        frame = similarity.kmeans_centroids(emb, iters=iters, n_hint=300)
         assert_triplets_equal(
             triplet, similarity._collect_centroid_matrix(frame)
         )
 
     empty = emb.where("vec_id < 0")
-    frame, triplet = similarity.kmeans_centroids(
-        empty, iters=2, return_matrix=True
-    )
+    triplet = similarity.kmeans_centroid_matrix(empty, iters=2)
+    frame = similarity.centroid_frame(spark, triplet)
     assert frame.count() == 0
     assert_triplets_equal(
         triplet, similarity._collect_centroid_matrix(frame)

@@ -335,3 +335,48 @@ def test_capped_dedup_census_shapes(spark):
         ) or "SortMergeJoin LeftAnti" not in plan, name
         assert "CartesianProduct" not in plan, name
         assert "SortMergeJoin" not in plan, (name, "pair join lost broadcast")
+
+
+def test_run_concurrently_waits_for_all_and_reports_every_failure():
+    """``run_concurrently`` returns results in submission order, raises
+    the first failure in submission order with every other failure
+    attached as a note, and returns only after every thunk finished —
+    so a failing write beside a slow one can neither mask the other's
+    exception nor leave it running behind the caller."""
+    import threading
+    import time
+
+    import pytest
+
+    from polario_spark.plans.parallelism import run_concurrently
+
+    def slow_value():
+        time.sleep(0.2)
+        return "slow"
+
+    assert run_concurrently(slow_value, lambda: "fast") == ["slow", "fast"]
+
+    def slow_failure():
+        time.sleep(0.2)
+        raise ValueError("index write failed")
+
+    def fast_failure():
+        raise OSError("centroid write failed")
+
+    with pytest.raises(ValueError, match="index write failed") as info:
+        run_concurrently(slow_failure, fast_failure)
+    notes = getattr(info.value, "__notes__", [])
+    assert any("OSError: centroid write failed" in n for n in notes), notes
+
+    finished = threading.Event()
+
+    def slow_success():
+        time.sleep(0.3)
+        finished.set()
+
+    def failure():
+        raise RuntimeError("probe write failed")
+
+    with pytest.raises(RuntimeError, match="probe write failed"):
+        run_concurrently(failure, slow_success)
+    assert finished.is_set()

@@ -1,10 +1,9 @@
 """End-to-end query registry tests: run a representative subset of
-queries() against their DuckDB oracles at sf0.001 — the same comparison
-the driver's correctness gate performs."""
+queries() against their DuckDB oracles at sf0.001 with the
+``tools/check_oracles.py`` comparator (columns, Arrow types, row count,
+values) — the same comparison the correctness gate performs."""
 
 from __future__ import annotations
-
-import math
 
 import duckdb
 import pytest
@@ -16,8 +15,8 @@ from polario_spark.sources.tables import TABLES
 
 SF_DIR = "/root/testdata/sf0.001"
 
-# fast, shape-diverse subset; the full 21-query sweep runs via
-# tools/check_oracles.py (and the driver's gate)
+# fast, shape-diverse subset; the sweep over every registry entry runs
+# via tools/check_oracles.py
 SUBSET = [
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -75,32 +74,19 @@ def duck():
     return con
 
 
-def _normalize(rows, columns):
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-
-    def norm(v):
-        if isinstance(v, float):
-            return "nan" if math.isnan(v) else f"{v:.6f}"
-        return str(v)
-
-    return sorted(tuple(norm(r[i]) for i in order) for r in rows)
-
-
 @pytest.mark.parametrize("name", SUBSET)
-def test_query_matches_oracle(spark, duck, name):
+def test_query_matches_oracle(spark, duck, oracle_mismatch, name):
     fn = entry_mod.queries()[name]
-    # round 14: stable artifacts are corpus-keyed; rebind the baked
-    # gate-corpus path literals to where THIS corpus's run writes
+    # stable artifacts are corpus-keyed; rebind the baked gate-corpus
+    # path literals to where THIS corpus's run writes
     oracle = rebind_stable_paths(
         entry_mod.oracle_sql()[name], _GATE_SF_DIR, SF_DIR
     )
     sdf = fn(spark, SF_DIR)
-    rel = duck.sql(oracle)
-    assert sorted(sdf.columns) == sorted(rel.columns)
-    srows = _normalize([tuple(r) for r in sdf.collect()], sdf.columns)
-    drows = _normalize(rel.fetchall(), list(rel.columns))
-    assert len(srows) == len(drows)
-    assert srows == drows
+    problem = oracle_mismatch(
+        sdf.schema, sdf.collect(), duck.sql(oracle).arrow()
+    )
+    assert problem is None, f"{name}: {problem}"
 
 
 def test_entry_smoke(spark):

@@ -17,13 +17,17 @@ Usage: python tools/check_oracles.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
+from typing import Optional
 
 import duckdb
 import pyarrow as pa
 from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from polario_spark import get_spark  # noqa: E402
@@ -77,6 +81,35 @@ def normalize(rows, columns):
     return sorted(tuple(norm_val(r[i]) for i in order) for r in rows)
 
 
+def mismatch(schema: StructType, rows, oracle: pa.Table) -> Optional[str]:
+    """Why a Spark result differs from its DuckDB oracle, or None when it
+    matches: column names, Arrow column types (the Spark side's are
+    ``toArrow()``'s, taken from ``schema`` without running the plan), row
+    count, then order-insensitive values. ``rows`` are the Spark frame's
+    collected rows; ``oracle`` is the oracle query's Arrow table."""
+    scols = schema.fieldNames()
+    dcols = list(oracle.schema.names)
+    if sorted(scols) != sorted(dcols):
+        return f"columns spark={sorted(scols)} duck={sorted(dcols)}"
+    stypes = _type_map(to_arrow_schema(schema).empty_table())
+    dtypes = _type_map(oracle)
+    mistyped = {
+        c: (stypes[c], dtypes[c]) for c in stypes if stypes[c] != dtypes[c]
+    }
+    if mistyped:
+        return f"column types differ (spark, duck): {mistyped}"
+    sn = normalize([tuple(r) for r in rows], scols)
+    dn = normalize(
+        [tuple(d[c] for c in dcols) for d in oracle.to_pylist()], dcols
+    )
+    if len(sn) != len(dn):
+        return f"rowcount spark={len(sn)} duck={len(dn)}"
+    if sn != dn:
+        diff = [(a, b) for a, b in zip(sn, dn) if a != b][:3]
+        return f"values differ, first diffs: {diff}"
+    return None
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
@@ -93,10 +126,7 @@ def main() -> int:
             continue
         try:
             sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            # toArrow()'s column types, without running the plan a second time
-            stbl = to_arrow_schema(sdf.schema).empty_table()
-            srows = [tuple(r) for r in sdf.collect()]
+            srows = sdf.collect()
         except Exception as exc:
             failures.append(name)
             print(f"FAIL  {name}: spark error: {exc}")
@@ -112,37 +142,16 @@ def main() -> int:
                 rebind_stable_paths(oracles[name], _GATE_SF_DIR, sf_dir)
             )
             dtbl = rel.arrow()
-            dcols = list(dtbl.schema.names)
-            drows = [
-                tuple(d[c] for c in dcols) for d in dtbl.to_pylist()
-            ]
         except Exception as exc:
             failures.append(name)
             print(f"FAIL  {name}: oracle error: {str(exc)[:200]}")
             continue
-        if sorted(scols) != sorted(dcols):
+        problem = mismatch(sdf.schema, srows, dtbl)
+        if problem:
             failures.append(name)
-            print(f"FAIL  {name}: columns spark={sorted(scols)} duck={sorted(dcols)}")
+            print(f"FAIL  {name}: {problem}")
             continue
-        stypes, dtypes = _type_map(stbl), _type_map(dtbl)
-        mistyped = {
-            c: (stypes[c], dtypes[c]) for c in stypes if stypes[c] != dtypes[c]
-        }
-        if mistyped:
-            failures.append(name)
-            print(f"FAIL  {name}: column types differ (spark, duck): {mistyped}")
-            continue
-        sn, dn = normalize(srows, scols), normalize(drows, dcols)
-        if len(sn) != len(dn):
-            failures.append(name)
-            print(f"FAIL  {name}: rowcount spark={len(sn)} duck={len(dn)}")
-            continue
-        if sn != dn:
-            failures.append(name)
-            diff = [(a, b) for a, b in zip(sn, dn) if a != b][:3]
-            print(f"FAIL  {name}: values differ, first diffs: {diff}")
-            continue
-        print(f"OK    {name}: {len(sn)} rows")
+        print(f"OK    {name}: {len(srows)} rows")
     spark.stop()
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     return 1 if failures else 0
