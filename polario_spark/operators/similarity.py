@@ -691,112 +691,187 @@ COSINE_SHIP_TILE = 8192
 DENSE_TILE_FRACTION = 0.125
 
 
-def _make_screened_tile_sims(
-    margin=SCREEN_MARGIN,
-    min_thr=SCREEN_MIN_THRESHOLD,
-    dense_frac=DENSE_TILE_FRACTION,
-):
-    """Factory for the shared inner kernel of the three tiled pair
-    verifies (``cosine_pairs`` tiles, LSH bucket sub-tiles, SemDeDup
-    cell blocks). A factory on purpose: the kernel is referenced from
-    mapInPandas/applyInPandas closures, and a plain module-level
-    function would cloudpickle BY REFERENCE — requiring every Python
-    worker to import ``polario_spark``, which only holds when the
-    driver's sys.path happens to reach the workers. A factory-made
-    nested function pickles BY VALUE (its qualname is not importable),
-    with ``margin``/``min_thr`` frozen into the defaults, so the
-    closures stay self-contained the way the existing kernels are.
+def _make_vector_kernels():
+    """The worker-side numpy steps of the vector kernels, each written
+    once: block and per-row decode, the clamped norm, the cosine matrix,
+    the blocked argmax, the running top-k merge, the float32 screen, the
+    sub-tile walk and the two tile kernels built on them. Every
+    mapInPandas kernel in this module calls them through ``_VK``.
+
+    A factory on purpose: the kernels are mapInPandas closures, and a
+    plain module-level function would cloudpickle BY REFERENCE —
+    requiring every Python worker to import ``polario_spark``, which
+    only holds when the driver's sys.path happens to reach the workers.
+    Factory-made functions pickle BY VALUE (their qualnames are not
+    importable), so a closure that reads ``_VK`` carries the whole set.
+    The screen constants are module globals, captured when the closure
+    is pickled; tile and block widths are arguments, read by the plan
+    builder, so a patched ``COSINE_TILE`` / ``ASSIGN_CENT_BLOCK``
+    reaches the workers.
     """
+    from types import SimpleNamespace
 
-    def screened(mat_a, na, mat_b, nb, thr, mat_a32, mat_b32):
-        """All pairs with ``round(cosine_float64, 4) >= thr`` as
-        ``(ia, ib, sim)`` index arrays into the given blocks.
+    def norms(mat):
+        """Row norms clamped at 1e-12: a zero vector scores cosine 0
+        against everything (never pairs, never wins an argmax by NaN)."""
+        import numpy as np
 
-        Screen-then-rescore: the full pair matrix is computed ONCE in
-        float32 (half the GEMM cost and memory of the former float64
-        matrix, and no full-matrix round pass), every pair clearing
-        ``thr - margin`` is re-scored from the float64 inputs, and only
-        those survivors are thresholded at ``thr``. The margin
-        dominates the float32 error bound by ~20x (see SCREEN_MARGIN),
-        so no qualifying pair can be lost; for the thresholds the
-        operators use (0.35+) random-geometry candidates are a
-        sub-percent slice, so the re-score is O(survivors x dim),
-        never a second full GEMM.
+        return np.maximum(np.sqrt((mat * mat).sum(axis=1)), 1e-12)
 
-        The survivor re-score sums elementwise products (numpy pairwise
-        summation) where the former path read the dgemm cell — a ~1 ulp
+    def decode(ids_raw, flat_raw):
+        """``(ids, (n, d) float64 matrix, norms)`` of one shipped block
+        (flat ids + row-major flattened vectors). A 0-dim corpus
+        degenerates to (n, 0): dots are 0 -> cosine 0 under the norm
+        clamp (never pairs). Callers that screen make the float32 copy
+        themselves."""
+        import numpy as np
+
+        ids = np.asarray(ids_raw, np.int64)
+        flat = np.asarray(flat_raw, np.float64)
+        mat = flat.reshape(len(ids), -1) if flat.size else np.zeros((len(ids), 0))
+        return ids, mat, norms(mat)
+
+    def stack(col, label):
+        """(n, d) float64 matrix of a pandas column of per-row vectors.
+        A ragged row or a NaN/Inf component raises a ValueError naming
+        ``label``: a non-finite sim makes every ``>`` comparison False
+        for its row, so the kernel would emit garbage instead of
+        failing."""
+        import numpy as np
+
+        try:
+            mat = np.stack(col.to_numpy()).astype(np.float64, copy=False)
+        except ValueError as exc:
+            raise ValueError(
+                f"malformed vector in {label} (wrong length) — shed with "
+                f"well_formed_vectors(dim=...)"
+            ) from exc
+        if not np.isfinite(mat).all():
+            raise ValueError(
+                f"non-finite vector component in {label} — shed with "
+                f"well_formed_vectors(dim=...)"
+            )
+        return mat
+
+    def cosine(a, na, b, nb):
+        """Cosine matrix ``(a . b) / (|a| |b|)`` of row sets a (..., m, d)
+        and b (..., n, d) given their clamped norms; leading stack axes
+        broadcast (batched GEMM). For 2-D inputs this is bitwise
+        ``(a @ b.T) / np.outer(na, nb)``."""
+        import numpy as np
+
+        return (a @ np.swapaxes(b, -1, -2)) / (na[..., :, None] * nb[..., None, :])
+
+    def argmax(mat, nm, c_mat, c_nm, block):
+        """Index of each row's nearest centroid (max cosine), over
+        ``block``-wide centroid slices so memory stays rows x block.
+        Bitwise-tied sims resolve to the smallest index: np.argmax keeps
+        the first max within a block and the cross-block update is
+        strict >. Centroid rows are cid-ascending (``_centroid_triplet``),
+        so that is the smallest cid. With finite inputs every row is
+        updated by the first block; the 0 start only rules out
+        uninitialized memory."""
+        import numpy as np
+
+        best_sim = np.full(len(mat), -np.inf)
+        best = np.zeros(len(mat), np.int64)
+        rows = np.arange(len(mat))
+        for c0 in range(0, len(c_mat), block):
+            sims = cosine(mat, nm, c_mat[c0 : c0 + block], c_nm[c0 : c0 + block])
+            arg = np.argmax(sims, axis=1)
+            s = sims[rows, arg]
+            upd = s > best_sim
+            best_sim[upd] = s[upd]
+            best[upd] = c0 + arg[upd]
+        return best
+
+    def topk(run_s, run_i, sims, ids, k):
+        """Merge one candidate block into a running per-row top-k under
+        (sim DESC, id ASC). ``sims`` columns ascend in ``ids``, so the
+        stable descending argsort keeps bitwise ties id-ascending; the
+        merge then sorts id-ascending first and stable sim-descending
+        second — the comparator the final window and the oracles use, so
+        the union of partial top-ks holds the exact global top-k."""
+        import numpy as np
+
+        idx = np.argsort(-sims, axis=1, kind="stable")[:, :k]
+        s = np.concatenate([run_s, np.take_along_axis(sims, idx, axis=1)], axis=1)
+        i = np.concatenate([run_i, ids[idx]], axis=1)
+        o1 = np.argsort(i, axis=1, kind="stable")
+        s = np.take_along_axis(s, o1, axis=1)
+        i = np.take_along_axis(i, o1, axis=1)
+        o2 = np.argsort(-s, axis=1, kind="stable")[:, :k]
+        return np.take_along_axis(s, o2, axis=1), np.take_along_axis(i, o2, axis=1)
+
+    def screen(a, na, b, nb, thr, a32, b32):
+        """The float32 screen of a tile: ``None`` when the tile must be
+        scored densely in float64, else the survivors ``(ia, ib, sim)``
+        with ``sim = round(cosine_float64, 4) >= thr``.
+
+        The full pair matrix is computed ONCE in float32 (half the GEMM
+        cost and memory of float64, no full-matrix round pass), every
+        pair clearing ``thr - SCREEN_MARGIN`` is re-scored from the
+        float64 inputs, and only those survivors are thresholded. At
+        the thresholds the operators use (0.35+) random-geometry
+        survivors are a sub-percent slice, so the re-score is
+        O(survivors x dim), never a second full GEMM. The margin
+        dominates the float32 error bound ~20x, so no qualifying
+        pair is lost, and the dense path (every pair in float64)
+        selects exactly the same pairs. Dense means ``thr`` under
+        SCREEN_MIN_THRESHOLD (the screen would keep nearly everything)
+        or a dup-heavy tile past DENSE_TILE_FRACTION (the gather would
+        materialize |survivors| x dim float64 rows). The choice is a
+        pure function of the tile's bytes.
+
+        The re-score sums elementwise products (numpy pairwise
+        summation) where the dense path reads a dgemm cell: a ~1 ulp
         summation-order difference of exactly the class the 4-decimal
         round already absorbs between Spark and the DuckDB oracle's own
-        fold order (see the DETERMINISM notes); values are otherwise
-        the same float64 arithmetic on the same bytes.
+        fold order; the values are otherwise the same float64 arithmetic
+        on the same bytes.
         """
         import numpy as np
 
-        def full():
-            sim = np.round((mat_a @ mat_b.T) / np.outer(na, nb), 4)
-            ia, ib = np.nonzero(sim >= thr)
-            return ia, ib, sim[ia, ib]
-
-        if thr < min_thr:
-            return full()
-        scr = (mat_a32 @ mat_b32.T) / np.outer(
-            na.astype(np.float32), nb.astype(np.float32)
-        )
-        cand = scr >= np.float32(thr - margin)
+        if thr < SCREEN_MIN_THRESHOLD:
+            return None
+        scr = cosine(a32, na.astype(np.float32), b32, nb.astype(np.float32))
+        cand = scr >= np.float32(thr - SCREEN_MARGIN)
         ncand = int(cand.sum())
         if ncand == 0:
             return np.empty(0, np.intp), np.empty(0, np.intp), np.empty(0)
-        if ncand >= dense_frac * cand.size:
-            # dup-heavy tile: nearly everything clears the screen, and
-            # the gather below would materialize |survivors| x dim
-            # float64 rows — one full dgemm plus a direct nonzero is
-            # cheaper and produces the same pair set (the screen can
-            # only EXCLUDE pairs the margin proves can't qualify)
-            return full()
+        if ncand >= DENSE_TILE_FRACTION * cand.size:
+            return None
         ia, ib = np.nonzero(cand)
-        sim = np.round(
-            (mat_a[ia] * mat_b[ib]).sum(axis=1) / (na[ia] * nb[ib]), 4
-        )
+        sim = np.round((a[ia] * b[ib]).sum(axis=1) / (na[ia] * nb[ib]), 4)
         m = sim >= thr
         return ia[m], ib[m], sim[m]
 
-    return screened
-
-
-_screened_tile_sims = _make_screened_tile_sims()
-
-
-def _make_tile_reduce(
-    margin=SCREEN_MARGIN,
-    min_thr=SCREEN_MIN_THRESHOLD,
-    dense_frac=DENSE_TILE_FRACTION,
-):
-    """Factory for the per-tile REDUCE kernel of aggregate-output pair
-    verifies (SemDeDup): instead of RETURNING qualifying pairs, it folds
-    them into per-column (id_b) partials — ``cnt[j] += |{i : round(sim,4)
-    >= thr and id_a[i] < id_b[j]}|`` and ``msim[j] = max(...)`` — so a
-    task emits at most one row per id_b per block pair, never one row
-    per PAIR. Same factory-pickling rationale as _make_screened_tile_sims
-    (cloudpickle by value; see that docstring).
-
-    The qualifying-pair SET is identical to _screened_tile_sims': the
-    float32 screen's margin guarantee (margin dominates the error bound
-    ~20x) means no pair with round(cosine_float64, 4) >= thr can fall
-    below ``thr - margin`` in float32, so the dense path (which skips
-    the screen filter and scores every pair in float64) and the sparse
-    path (screen, gather, re-score) select exactly the same pairs; dgemm
-    cells vs elementwise-product sums differ by the ~1-ulp summation-
-    order class the 4-decimal round already absorbs (see the
-    DETERMINISM notes). Path CHOICE is a pure function of the tile's
-    screen density — deterministic for given bytes.
-    """
-
-    def reduce_tile(
-        mat_a, na, mat_b, nb, thr, mat_a32, mat_b32, ids_a, ids_b, cnt, msim, joff
-    ):
+    def screened(a, na, b, nb, thr, a32, b32):
+        """All pairs with ``round(cosine_float64, 4) >= thr`` as
+        ``(ia, ib, sim)`` index arrays into the given blocks: the
+        ``screen`` survivors, or one float64 GEMM plus a direct nonzero
+        on a dense tile."""
         import numpy as np
 
-        def dense(sim):
+        hit = screen(a, na, b, nb, thr, a32, b32)
+        if hit is not None:
+            return hit
+        sim = np.round(cosine(a, na, b, nb), 4)
+        ia, ib = np.nonzero(sim >= thr)
+        return ia, ib, sim[ia, ib]
+
+    def reduce_tile(a, na, b, nb, thr, a32, b32, ids_a, ids_b, cnt, msim, joff):
+        """Fold a tile's qualifying pairs into per-column (id_b)
+        partials instead of returning them: ``cnt[joff + j] += |{i :
+        round(sim, 4) >= thr and ids_a[i] < ids_b[j]}|`` and
+        ``msim[joff + j] = max(...)``. Same pair set as ``screened``; a
+        dense tile reduces the float64 matrix directly, so it never
+        builds pair arrays."""
+        import numpy as np
+
+        hit = screen(a, na, b, nb, thr, a32, b32)
+        if hit is None:
+            sim = np.round(cosine(a, na, b, nb), 4)
             mask = (sim >= thr) & (ids_a[:, None] < ids_b[None, :])
             c = mask.sum(axis=0)
             upd = c > 0
@@ -806,34 +881,61 @@ def _make_tile_reduce(
                 mv = msim[joff : joff + len(ids_b)]
                 cv[upd] += c[upd]
                 mv[upd] = np.maximum(mv[upd], m[upd])
-
-        if thr < min_thr:
-            dense(np.round((mat_a @ mat_b.T) / np.outer(na, nb), 4))
             return
-        scr = (mat_a32 @ mat_b32.T) / np.outer(
-            na.astype(np.float32), nb.astype(np.float32)
-        )
-        cand = scr >= np.float32(thr - margin)
-        ncand = int(cand.sum())
-        if ncand == 0:
-            return
-        if ncand >= dense_frac * cand.size:
-            dense(np.round((mat_a @ mat_b.T) / np.outer(na, nb), 4))
-            return
-        ia, ib = np.nonzero(cand)
-        sim = np.round(
-            (mat_a[ia] * mat_b[ib]).sum(axis=1) / (na[ia] * nb[ib]), 4
-        )
-        keep = (sim >= thr) & (ids_a[ia] < ids_b[ib])
+        ia, ib, sim = hit
+        keep = ids_a[ia] < ids_b[ib]
         if keep.any():
             ibk = ib[keep] + joff
             np.add.at(cnt, ibk, 1)
             np.maximum.at(msim, ibk, sim[keep])
 
-    return reduce_tile
+    def tiles(n_a, n_b, tile, same):
+        """``(slice_a, slice_b)`` sub-tiles covering an n_a x n_b block
+        pair, so a screen matrix is bounded at tile^2 however wide the
+        shipped unit is. On a diagonal pair (``same``: one id-sorted
+        unit on both sides) only the upper sub-triangle: a sub-diagonal
+        sub-tile cannot contain id_a < id_b."""
+        for i0 in range(0, n_a, tile):
+            for j0 in range(i0 if same else 0, n_b, tile):
+                yield slice(i0, i0 + tile), slice(j0, j0 + tile)
+
+    def tile_pairs(a, b, thr, tile, same, out):
+        """Append the id_a < id_b pairs of blocks ``a`` and ``b`` (each
+        ``(ids, mat, norms, mat32)``) with ``round(cosine, 4) >= thr`` to
+        the ``(id_a, id_b, sim)`` lists ``out``, walking ``tiles``
+        through ``screened``."""
+        ids_a, mat_a, na, a32 = a
+        ids_b, mat_b, nb, b32 = b
+        for sa, sb in tiles(len(ids_a), len(ids_b), tile, same):
+            ia, ib, sim = screened(
+                mat_a[sa], na[sa], mat_b[sb], nb[sb], thr, a32[sa], b32[sb]
+            )
+            keep = ids_a[sa][ia] < ids_b[sb][ib]
+            if keep.any():
+                out[0].append(ids_a[sa][ia][keep])
+                out[1].append(ids_b[sb][ib][keep])
+                out[2].append(sim[keep])
+
+    def pairs_frame(out):
+        """The (id_a, id_b, sim) pandas frame of ``tile_pairs`` lists, or
+        None when no pair qualified."""
+        import numpy as np
+        import pandas as pd
+
+        if not out[0]:
+            return None
+        return pd.DataFrame(
+            {c: np.concatenate(v) for c, v in zip(("id_a", "id_b", "sim"), out)}
+        )
+
+    return SimpleNamespace(
+        norms=norms, decode=decode, stack=stack, cosine=cosine,
+        argmax=argmax, topk=topk, screened=screened, reduce_tile=reduce_tile,
+        tiles=tiles, tile_pairs=tile_pairs, pairs_frame=pairs_frame,
+    )
 
 
-_tile_reduce = _make_tile_reduce()
+_VK = _make_vector_kernels()
 
 
 def _cell_rank_blocks(frame, id_col, vec_col, out_ids, out_flat):
@@ -880,103 +982,6 @@ def _cell_rank_blocks(frame, id_col, vec_col, out_ids, out_flat):
             ),
         )
     )
-
-
-def _make_block_topk(k, tile=COSINE_TILE):
-    """Factory for the IVF search kernel: one (query-block, member-block)
-    pair per input row, GEMM-scored in ``tile``-bounded sub-tiles, with a
-    per-query RUNNING top-k merged across sub-tiles — a task emits at
-    most k rows per query per member block, never one row per (query,
-    member) pair. Replaces the former per-pair interpreted HOF dot +
-    corpus-wide window: at the x300 probe point (600k vectors) the
-    search evaluated ~60M interpreted 64-dim dots and ann_ivf_topk grew
-    alpha(100->300) = 1.77; the per-pair arithmetic here is BLAS dgemm.
-
-    Determinism: sims round to 4 decimals (the documented cross-engine
-    absorption class — dgemm vs the oracle's sequential fold differ by
-    ~1 ulp), and every partial and merge orders by (sim DESC, nid ASC)
-    using stable argsorts over nid-ascending inputs, so the union of
-    partial top-ks contains exactly the global top-k the final window
-    selects with the same comparator. Self-pairs (qid == nid) are
-    masked before selection. Factory-made for cloudpickle-by-value
-    (see _make_screened_tile_sims).
-    """
-
-    def search(batches):
-        import numpy as np
-        import pandas as pd
-
-        def decode(ids_raw, flat_raw):
-            ids = np.asarray(ids_raw, np.int64)
-            flat = np.asarray(flat_raw, np.float64)
-            mat = (
-                flat.reshape(len(ids), -1)
-                if flat.size
-                else np.zeros((len(ids), 0))
-            )
-            norms = np.maximum(np.sqrt((mat * mat).sum(axis=1)), 1e-12)
-            return ids, mat, norms
-
-        def merge(run_s, run_i, cand_s, cand_i):
-            s = np.concatenate([run_s, cand_s], axis=1)
-            i = np.concatenate([run_i, cand_i], axis=1)
-            # nid-ascending first, then stable sim-descending: equal
-            # sims keep nid order — the (sim DESC, nid ASC) comparator
-            o1 = np.argsort(i, axis=1, kind="stable")
-            s = np.take_along_axis(s, o1, axis=1)
-            i = np.take_along_axis(i, o1, axis=1)
-            o2 = np.argsort(-s, axis=1, kind="stable")[:, :k]
-            return (
-                np.take_along_axis(s, o2, axis=1),
-                np.take_along_axis(i, o2, axis=1),
-            )
-
-        PAD_ID = np.iinfo(np.int64).max
-        for pdf in batches:
-            out = []
-            for qids_r, qflat_r, nids_r, nflat_r in zip(
-                pdf["__qids"], pdf["__qflat"], pdf["__nids"], pdf["__nflat"]
-            ):
-                qids, Q, nq = decode(qids_r, qflat_r)
-                nids, M, nm = decode(nids_r, nflat_r)
-                for i0 in range(0, len(qids), tile):
-                    i1 = i0 + tile
-                    qs, qv, qn = qids[i0:i1], Q[i0:i1], nq[i0:i1]
-                    run_s = np.full((len(qs), k), -np.inf)
-                    run_i = np.full((len(qs), k), PAD_ID, np.int64)
-                    for j0 in range(0, len(nids), tile):
-                        j1 = j0 + tile
-                        sims = np.round(
-                            (qv @ M[j0:j1].T) / np.outer(qn, nm[j0:j1]), 4
-                        )
-                        sims[qs[:, None] == nids[None, j0:j1]] = -np.inf
-                        # member sub-tiles are nid-ascending, so the
-                        # stable descending argsort keeps ties nid-asc
-                        idx = np.argsort(-sims, axis=1, kind="stable")[
-                            :, :k
-                        ]
-                        run_s, run_i = merge(
-                            run_s,
-                            run_i,
-                            np.take_along_axis(sims, idx, axis=1),
-                            nids[j0:j1][idx],
-                        )
-                    valid = run_s > -np.inf
-                    if valid.any():
-                        nk = run_s.shape[1]
-                        out.append(
-                            pd.DataFrame(
-                                {
-                                    "qid": np.repeat(qs, nk)[valid.ravel()],
-                                    "nid": run_i.ravel()[valid.ravel()],
-                                    "sim": run_s.ravel()[valid.ravel()],
-                                }
-                            )
-                        )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    return search
 
 
 def cosine_pairs(
@@ -1051,53 +1056,27 @@ def cosine_pairs(
     )
     pairs = a.join(b, F.col("ta") <= F.col("tb"))
 
+    tile = COSINE_TILE
+
     def tile_cosine(batches):
         import numpy as np
-        import pandas as pd
 
-        def decode(ids_raw, flat_raw):
-            ids = np.asarray(ids_raw, np.int64)
-            flat = np.asarray(flat_raw, np.float64)
-            mat = (
-                flat.reshape(len(ids), -1)
-                if flat.size
-                else np.zeros((len(ids), 0))
-            )
-            # zero-norm clamp, same rationale as bucket_pairs: zero
-            # vectors score 0 (never pair) instead of NaN
-            norms = np.maximum(np.sqrt((mat * mat).sum(axis=1)), 1e-12)
-            return ids, mat, norms, mat.astype(np.float32)
-
-        T = COSINE_TILE
         for pdf in batches:
-            out_a, out_b, out_s = [], [], []
+            out = ([], [], [])
             for same, ids_ra, flat_ra, ids_rb, flat_rb in zip(
                 pdf["ta"] == pdf["tb"],
                 pdf["ids_a"], pdf["flat_a"], pdf["ids_b"], pdf["flat_b"],
             ):
-                ids_a, mat_a, na, mat_a32 = decode(ids_ra, flat_ra)
-                ids_b, mat_b, nb, mat_b32 = decode(ids_rb, flat_rb)
-                for i0 in range(0, len(ids_a), T):
-                    i1 = i0 + T
-                    for j0 in range(i0 if same else 0, len(ids_b), T):
-                        j1 = j0 + T
-                        ia, ib, sim = _screened_tile_sims(
-                            mat_a[i0:i1], na[i0:i1],
-                            mat_b[j0:j1], nb[j0:j1], threshold,
-                            mat_a32[i0:i1], mat_b32[j0:j1],
-                        )
-                        keep = ids_a[i0:i1][ia] < ids_b[j0:j1][ib]
-                        out_a.append(ids_a[i0:i1][ia][keep])
-                        out_b.append(ids_b[j0:j1][ib][keep])
-                        out_s.append(sim[keep])
-            if out_a:
-                yield pd.DataFrame(
-                    {
-                        "id_a": np.concatenate(out_a),
-                        "id_b": np.concatenate(out_b),
-                        "sim": np.concatenate(out_s),
-                    }
+                ids_a, mat_a, na = _VK.decode(ids_ra, flat_ra)
+                ids_b, mat_b, nb = _VK.decode(ids_rb, flat_rb)
+                _VK.tile_pairs(
+                    (ids_a, mat_a, na, mat_a.astype(np.float32)),
+                    (ids_b, mat_b, nb, mat_b.astype(np.float32)),
+                    threshold, tile, same, out,
                 )
+            res = _VK.pairs_frame(out)
+            if res is not None:
+                yield res
 
     return pairs.mapInPandas(
         tile_cosine, schema="id_a long, id_b long, sim double"
@@ -1334,7 +1313,7 @@ def cosine_pairs_bucketed(
     the pair space is never enumerated. Degenerate buckets (boilerplate
     corpora collapsing many vectors into one (band, sig)) cannot blow a
     task: the per-bucket verify sub-tiles its GEMM at ``COSINE_TILE``
-    (see ``bucket_pairs``), so peak memory per task is one tile pair
+    (see ``bucket_pairs_stream``), so peak memory per task is one tile pair
     regardless of bucket size. (AQE skew-join does NOT help here — it
     splits join/shuffle partitions, not applyInPandas groups.) Raising
     LSH_BITS_PER_BAND splits buckets geometrically for denser corpora.
@@ -1387,23 +1366,20 @@ def cosine_pairs_bucketed(
         F.col(id_col).alias("__id"),
         F.expr(f"transform({vec_col}, x -> cast(x as double))").alias("__v"),
     )
-    # Round 15 (opt): signature assembly is ONE vectorized numpy kernel
-    # for every dial size. The former codegen form emitted r*L scalar
-    # CASEs in one projection — at sized dials (r*L in the hundreds) the
-    # generated method exceeds the JIT's huge-method limit and executes
-    # as interpreted bytecode (measured: the sig stage's executor CPU
-    # swung 1.8-28 s at sf0.1 with multi-second GC, for what is ~0.6M
-    # comparisons), and the literal-array HOF fallback for even larger
-    # dials is interpreted per plane by construction. A sign test is an
-    # EXACT comparison (no arithmetic) and a band signature an exact
-    # small-integer sum, so numpy produces bit-identical (band, sig)
-    # values to both expression forms (and to the DuckDB oracle built
-    # from _lsh_band_sigs) — guide §4.2: hand whole batches to
-    # vectorized native code. _lsh_index_pairs stays the shared refusal
-    # funnel (r > 62 overflows a 64-bit signature). The kernel yields in
-    # bounded slices: output amplification is L rows per input row, so
-    # one 10k-row Arrow input batch would otherwise emit one L*10k-row
-    # batch (payload duplicated per band) in a single allocation.
+    # Signature assembly is ONE vectorized numpy kernel for every dial
+    # size. A codegen form (r*L scalar CASEs in one projection) exceeds
+    # the JIT's huge-method limit at sized dials (r*L in the hundreds)
+    # and runs as interpreted bytecode (measured: the sig stage's
+    # executor CPU swung 1.8-28 s at sf0.1 with multi-second GC, for
+    # ~0.6M comparisons); the literal-array HOF form is interpreted per
+    # plane by construction. A sign test is an EXACT comparison and a
+    # band signature an exact small-integer sum, so numpy produces
+    # bit-identical (band, sig) values to both expression forms and to
+    # the DuckDB oracle built from _lsh_band_sigs. _lsh_index_pairs
+    # stays the shared refusal funnel (r > 62 overflows a 64-bit
+    # signature). The kernel yields in bounded slices: output
+    # amplification is L rows per input row, so one 10k-row Arrow batch
+    # would otherwise emit one L*10k-row batch in a single allocation.
     idx_pairs = _lsh_index_pairs(
         dim, bits_per_band * n_bands, LSH_SEED, bits_per_band
     )
@@ -1423,7 +1399,7 @@ def cosine_pairs_bucketed(
             n = len(pdf)
             if n == 0:
                 continue
-            mat = np.stack(pdf["__v"].to_numpy())
+            mat = _VK.stack(pdf["__v"], "LSH banding")
             bits = mat[:, A] > mat[:, B]
             sigs = (bits.reshape(n, _L, _r) * W[None, None, :]).sum(
                 axis=2, dtype=np.int64
@@ -1452,82 +1428,45 @@ def cosine_pairs_bucketed(
         sigs = sigs.repartition(int(parts), "band", "sig")
     else:
         sigs = sigs.repartition("band", "sig")
-    # Round 15 (opt): the verify stage is GROUP-RUN mapInPandas over
-    # (band, sig)-sorted partitions, replacing groupBy().applyInPandas.
-    # Bucket membership and the per-bucket math are identical — the hash
-    # repartition above co-locates each bucket, the sort makes it one
-    # contiguous run, and the kernel walks run boundaries — but the
-    # Python boundary now crosses once per ~10k-row Arrow batch instead
-    # of once per BUCKET. Sized dials make buckets small by design
-    # (expected ~LSH_SIZED_BUCKET rows, thousands of buckets even at
-    # gate scale: n=2000 -> L=47 bands x 2^7 sigs), so per-group
-    # crossings dominated the stage: measured 6.4 s -> see
-    # OPTIMIZATION_r15.md (guide §4.1: batch the boundary, §4.5 state
-    # amortized per task). applyInPandas plans the same per-partition
-    # sort internally, so the explicit sort adds no new work.
+    # The verify stage is GROUP-RUN mapInPandas over (band, sig)-sorted
+    # partitions: the hash repartition above co-locates each bucket, the
+    # sort makes it one contiguous run, and the kernel walks run
+    # boundaries — the bucket membership and per-bucket math of
+    # groupBy().applyInPandas, but the Python boundary is crossed once
+    # per ~10k-row Arrow batch instead of once per BUCKET. Sized dials
+    # make buckets small by design (~LSH_SIZED_BUCKET rows, thousands of
+    # buckets even at gate scale), so per-group crossings would dominate
+    # the stage. applyInPandas plans the same per-partition sort, so the
+    # explicit sort adds no new work.
     sigs = sigs.sortWithinPartitions("band", "sig")
+    tile = COSINE_TILE
 
     def bucket_pairs_stream(batches):
         import numpy as np
         import pandas as pd
 
-        def big_bucket(ids_raw, mat_raw, out_a, out_b, out_s):
-            # Degenerate bucket (> COSINE_TILE rows): sub-tile at
-            # COSINE_TILE so peak memory is one T x T block + the
-            # bucket's vectors, never the bucket-squared matrix. Scoring
-            # is the shared screened kernel ((a . b) / (|a||b|), rounded
-            # at 4 — see _screened_tile_sims for the float32-screen
-            # rationale and the ulp class the round absorbs). Sort by id
-            # so the tile loop walks the upper triangle of tile pairs
-            # only (i0 <= j0) and still sees every id_a < id_b pair
-            # exactly once.
-            order = np.argsort(ids_raw, kind="stable")
-            ids = ids_raw[order]
-            mat = mat_raw[order]
-            norms = np.maximum(np.sqrt((mat * mat).sum(axis=1)), 1e-12)
-            n = len(ids)
-            mat32 = mat.astype(np.float32)
-            for i0 in range(0, n, COSINE_TILE):
-                i1 = min(i0 + COSINE_TILE, n)
-                for j0 in range(i0, n, COSINE_TILE):
-                    j1 = min(j0 + COSINE_TILE, n)
-                    ia, ib, sim = _screened_tile_sims(
-                        mat[i0:i1], norms[i0:i1], mat[j0:j1], norms[j0:j1],
-                        threshold, mat32[i0:i1], mat32[j0:j1],
-                    )
-                    keep = ids[i0:i1][ia] < ids[j0:j1][ib]
-                    if keep.any():
-                        out_a.append(ids[i0:i1][ia][keep])
-                        out_b.append(ids[j0:j1][ib][keep])
-                        out_s.append(sim[keep])
-
         def flush(pdf):
             # Vectorized across buckets: sized dials pin the bucket BODY
             # at ~LSH_SIZED_BUCKET rows, so a partition holds thousands
-            # of tiny runs — a per-bucket Python loop (the former
-            # applyInPandas shape, and its first mapInPandas port) spends
-            # its time in per-group call overhead, not FLOPs. Runs are
-            # grouped BY LENGTH and each length class scored as ONE
-            # batched GEMM (m x L x L), chunked so the sims tensor stays
-            # ~32 MB; only over-COSINE_TILE runs take the per-bucket
-            # tiled path. Pair SET and rounded sims are unchanged: dgemm
-            # vs elementwise summation differ by the ~1-ulp class
-            # round(·, 4) absorbs (see _screened_tile_sims DETERMINISM),
-            # and a pair of equal ids (duplicate-id corpus) is dropped by
-            # the lo < hi mask exactly as the sorted upper-triangle walk
-            # dropped it.
+            # of tiny runs and a per-bucket Python loop would spend its
+            # time in call overhead, not FLOPs. Runs are grouped BY
+            # LENGTH and each length class scored as ONE batched GEMM
+            # (m x L x L), chunked so the sims tensor stays ~32 MB. Pair
+            # SET and rounded sims match a per-bucket walk: dgemm vs
+            # elementwise summation differ by the ~1-ulp class round(·,
+            # 4) absorbs (see _VK.screen), and a pair of equal ids
+            # (duplicate-id corpus) is dropped by the lo < hi mask
+            # exactly as the sorted upper-triangle walk drops it.
             b = pdf["band"].to_numpy()
             s = pdf["sig"].to_numpy()
             ids = pdf["__id"].to_numpy()
-            mat = np.stack(pdf["__v"].to_numpy())
-            norms = np.maximum(np.sqrt((mat * mat).sum(axis=1)), 1e-12)
+            mat = _VK.stack(pdf["__v"], "LSH bucket verify")
+            norms = _VK.norms(mat)
             change = np.flatnonzero((b[1:] != b[:-1]) | (s[1:] != s[:-1])) + 1
             starts = np.concatenate(([0], change))
             lengths = np.diff(np.concatenate((starts, [len(pdf)])))
-            out_a: list = []
-            out_b: list = []
-            out_s: list = []
-            small = (lengths >= 2) & (lengths <= COSINE_TILE)
+            out = ([], [], [])
+            small = (lengths >= 2) & (lengths <= tile)
             for ln in np.unique(lengths[small]):
                 offs = starts[small][lengths[small] == ln]
                 iu, ju = np.triu_indices(ln, 1)
@@ -1536,13 +1475,8 @@ def cosine_pairs_bucketed(
                 for c0 in range(0, len(offs), step):
                     o = offs[c0 : c0 + step]
                     rows = o[:, None] + np.arange(ln)[None, :]
-                    g = mat[rows]
-                    gn = norms[rows]
-                    sims = np.round(
-                        np.matmul(g, g.transpose(0, 2, 1))
-                        / (gn[:, :, None] * gn[:, None, :]),
-                        4,
-                    )
+                    g, gn = mat[rows], norms[rows]
+                    sims = np.round(_VK.cosine(g, gn, g, gn), 4)
                     simp = sims[:, iu, ju].ravel()
                     ka = ids[rows[:, iu]].ravel()
                     kb = ids[rows[:, ju]].ravel()
@@ -1550,24 +1484,21 @@ def cosine_pairs_bucketed(
                     hi = np.maximum(ka, kb)
                     keep = (simp >= threshold) & (lo < hi)
                     if keep.any():
-                        out_a.append(lo[keep])
-                        out_b.append(hi[keep])
-                        out_s.append(simp[keep])
-            for st, ln in zip(
-                starts[lengths > COSINE_TILE], lengths[lengths > COSINE_TILE]
-            ):
-                big_bucket(
-                    ids[st : st + ln], mat[st : st + ln], out_a, out_b, out_s
-                )
-            if not out_a:
-                return None
-            return pd.DataFrame(
-                {
-                    "id_a": np.concatenate(out_a),
-                    "id_b": np.concatenate(out_b),
-                    "sim": np.concatenate(out_s),
-                }
-            )
+                        out[0].append(lo[keep])
+                        out[1].append(hi[keep])
+                        out[2].append(simp[keep])
+            # Degenerate bucket (> tile rows): sorted by id and walked in
+            # tile-sized sub-tiles (upper triangle only), so peak memory
+            # is one tile^2 block plus the bucket's vectors, never the
+            # bucket-squared matrix; every id_a < id_b pair is still
+            # seen exactly once.
+            for st, ln in zip(starts[lengths > tile], lengths[lengths > tile]):
+                order = np.argsort(ids[st : st + ln], kind="stable")
+                bmat = mat[st : st + ln][order]
+                blk = (ids[st : st + ln][order], bmat, _VK.norms(bmat),
+                       bmat.astype(np.float32))
+                _VK.tile_pairs(blk, blk, threshold, tile, True, out)
+            return _VK.pairs_frame(out)
 
         # A bucket may span Arrow batch boundaries: carry the trailing
         # (possibly incomplete) run into the next batch. Peak held rows =
@@ -2048,8 +1979,7 @@ def _centroid_triplet(pairs):
             "centroid vectors must share one dimension — shed malformed "
             "rows with well_formed_vectors(dim=...) before clustering"
         ) from exc
-    norms = np.maximum(np.sqrt((mat * mat).sum(axis=1)), 1e-12)
-    return ids, mat, norms
+    return ids, mat, _VK.norms(mat)
 
 
 def _collect_centroid_matrix(centroids: DataFrame):
@@ -2216,9 +2146,8 @@ def _gemm_topp_frame(
     """Blocked-GEMM running top-P over a (qid, __q) frame — the probe
     kernel behind :func:`probe_cells`. Same broadcast lifecycle and
     malformed-input contract as ``_gemm_assign_frame``; the running
-    merge is the same two-stable-argsort comparator preservation as
-    ``_make_block_topk`` (cid-ascending first, then stable sim-
-    descending), so bitwise ties always resolve to the smaller cid."""
+    merge is ``_VK.topk`` over cid-ascending centroid blocks, so bitwise
+    ties always resolve to the smaller cid."""
     from pyspark.sql.types import StructField, StructType
 
     cids, cmat, cnorms = cent_np
@@ -2247,50 +2176,19 @@ def _gemm_topp_frame(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            try:
-                mat = np.stack(pdf["__q"].to_numpy()).astype(
-                    np.float64, copy=False
-                )
-            except ValueError as exc:
-                raise ValueError(
-                    "malformed vector in GEMM probe selection (wrong "
-                    "length) — shed with well_formed_vectors(dim=...)"
-                ) from exc
-            if not np.isfinite(mat).all():
-                raise ValueError(
-                    "non-finite vector component in GEMM probe selection "
-                    "— shed with well_formed_vectors(dim=...)"
-                )
-            norms = np.maximum(np.sqrt((mat * mat).sum(axis=1)), 1e-12)
-            n = len(mat)
-            run_s = np.full((n, P), -np.inf)
-            run_c = np.full((n, P), PAD, np.int64)
+            mat = _VK.stack(pdf["__q"], "GEMM probe selection")
+            norms = _VK.norms(mat)
+            run_s = np.full((len(mat), P), -np.inf)
+            run_c = np.full((len(mat), P), PAD, np.int64)
             for c0 in range(0, len(b_ids), block):
-                sims = (mat @ b_mat[c0 : c0 + block].T) / np.outer(
-                    norms, b_norms[c0 : c0 + block]
-                )
-                take = min(P, sims.shape[1])
-                # block columns ascend in cid -> stable argsort keeps
-                # bitwise ties cid-ascending
-                idx = np.argsort(-sims, axis=1, kind="stable")[:, :take]
-                s = np.concatenate(
-                    [run_s, np.take_along_axis(sims, idx, axis=1)], axis=1
-                )
-                c = np.concatenate(
-                    [run_c, b_ids[c0 : c0 + block][idx]], axis=1
-                )
-                o1 = np.argsort(c, axis=1, kind="stable")
-                s = np.take_along_axis(s, o1, axis=1)
-                c = np.take_along_axis(c, o1, axis=1)
-                o2 = np.argsort(-s, axis=1, kind="stable")[:, :P]
-                run_s = np.take_along_axis(s, o2, axis=1)
-                run_c = np.take_along_axis(c, o2, axis=1)
-            valid = run_s > -np.inf
-            qids = pdf["qid"].to_numpy()
+                c1 = c0 + block
+                sims = _VK.cosine(mat, norms, b_mat[c0:c1], b_norms[c0:c1])
+                run_s, run_c = _VK.topk(run_s, run_c, sims, b_ids[c0:c1], P)
+            valid = (run_s > -np.inf).ravel()
             yield pd.DataFrame(
                 {
-                    "qid": np.repeat(qids, run_s.shape[1])[valid.ravel()],
-                    "cell": run_c.ravel()[valid.ravel()],
+                    "qid": np.repeat(pdf["qid"].to_numpy(), P)[valid],
+                    "cell": run_c.ravel()[valid],
                 }
             )
 
@@ -2328,49 +2226,13 @@ def _gemm_assign_frame(vecs: DataFrame, cent_np, cid_type, bc=None) -> DataFrame
     block = ASSIGN_CENT_BLOCK
 
     def assign(batches):
-        import numpy as np
-
         b_ids, b_mat, b_norms = bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            try:
-                mat = np.stack(pdf["__v"].to_numpy()).astype(
-                    np.float64, copy=False
-                )
-            except ValueError as exc:
-                raise ValueError(
-                    "malformed vector in GEMM assignment (wrong "
-                    "length) — shed with well_formed_vectors(dim=...)"
-                ) from exc
-            if not np.isfinite(mat).all():
-                # a NaN/Inf component would make every `sims > best_sim`
-                # comparison False for its row, leaving the cell
-                # uninitialized — fail loudly instead of emitting
-                # nondeterministic garbage
-                raise ValueError(
-                    "non-finite vector component in GEMM assignment — "
-                    "shed with well_formed_vectors(dim=...)"
-                )
-            norms = np.maximum(np.sqrt((mat * mat).sum(axis=1)), 1e-12)
-            best_sim = np.full(len(mat), -np.inf)
-            # pre-filled (not np.empty): with finite inputs every row IS
-            # updated in the first block, this just removes the
-            # uninitialized-memory failure class outright
-            best_cell = np.full(len(mat), b_ids[0], b_ids.dtype)
-            for c0 in range(0, len(b_ids), block):
-                sims = (mat @ b_mat[c0 : c0 + block].T) / np.outer(
-                    norms, b_norms[c0 : c0 + block]
-                )
-                arg = np.argmax(sims, axis=1)
-                s = sims[np.arange(len(mat)), arg]
-                # strict >: an equal later-block sim loses to the
-                # earlier (smaller-cid) block's winner
-                upd = s > best_sim
-                best_sim[upd] = s[upd]
-                best_cell[upd] = b_ids[c0 : c0 + block][arg[upd]]
+            mat = _VK.stack(pdf["__v"], "GEMM assignment")
             out = pdf.copy()
-            out["cell"] = best_cell
+            out["cell"] = b_ids[_VK.argmax(mat, _VK.norms(mat), b_mat, b_norms, block)]
             yield out
 
     return vecs.mapInPandas(assign, schema=out_schema)
@@ -2378,8 +2240,8 @@ def _gemm_assign_frame(vecs: DataFrame, cent_np, cid_type, bc=None) -> DataFrame
 
 def _gemm_partial_means(vecs: DataFrame, bc) -> DataFrame:
     """One Lloyd round's map side as a single corpus pass: GEMM-argmax
-    each Arrow batch against the broadcast centroid triplet ``bc`` (the
-    same blocked kernel as ``_gemm_assign_frame``) and accumulate
+    each Arrow batch against the broadcast centroid triplet ``bc``
+    (``_VK.argmax``, as in ``_gemm_assign_frame``) and accumulate
     per-TASK ``cell -> (component sums, member count)`` partials in
     numpy, emitting one ``(cell, part)`` row per touched cell per task
     — ``part`` is ``dim + 1`` doubles with the count in the last slot.
@@ -2396,7 +2258,7 @@ def _gemm_partial_means(vecs: DataFrame, bc) -> DataFrame:
 
     Tie-break and non-finite behavior are the assign kernel's: smallest
     centroid INDEX on bitwise-tied sims (b_ids is cid-ascending, so
-    smallest cid), loud ValueError on NaN/Inf components.
+    smallest cid), loud ValueError on NaN/Inf components (``_VK.stack``).
     """
     from pyspark.sql.types import (
         ArrayType,
@@ -2428,34 +2290,10 @@ def _gemm_partial_means(vecs: DataFrame, bc) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            try:
-                mat = np.stack(pdf["__v"].to_numpy()).astype(
-                    np.float64, copy=False
-                )
-            except ValueError as exc:
-                raise ValueError(
-                    "malformed vector in GEMM assignment (wrong "
-                    "length) — shed with well_formed_vectors(dim=...)"
-                ) from exc
-            if not np.isfinite(mat).all():
-                raise ValueError(
-                    "non-finite vector component in GEMM assignment — "
-                    "shed with well_formed_vectors(dim=...)"
-                )
+            mat = _VK.stack(pdf["__v"], "GEMM assignment")
             if acc is None:
                 acc = np.zeros((len(b_ids), mat.shape[1]))
-            norms = np.maximum(np.sqrt((mat * mat).sum(axis=1)), 1e-12)
-            best_sim = np.full(len(mat), -np.inf)
-            best_idx = np.zeros(len(mat), np.int64)
-            for c0 in range(0, len(b_ids), block):
-                sims = (mat @ b_mat[c0 : c0 + block].T) / np.outer(
-                    norms, b_norms[c0 : c0 + block]
-                )
-                arg = np.argmax(sims, axis=1)
-                s = sims[np.arange(len(mat)), arg]
-                upd = s > best_sim
-                best_sim[upd] = s[upd]
-                best_idx[upd] = c0 + arg[upd]
+            best_idx = _VK.argmax(mat, _VK.norms(mat), b_mat, b_norms, block)
             np.add.at(acc, best_idx, mat)
             cnt += np.bincount(best_idx, minlength=len(b_ids))
         if acc is None:
@@ -2618,25 +2456,71 @@ def _ivf_block_search(
     (query, probed cell); ``members`` carries (cell, nid, __v); other
     columns are ignored. Returns (qid, nid, sim, rank).
 
-    Per-cell blocked GEMM with in-kernel per-query top-k partials (see
-    _make_block_topk): each side rank-blocks within its cell, the block
-    join ships bounded payloads, every dot is BLAS dgemm, and the final
-    window ranks only ~queries x nprobe x k x blocks candidate rows. A
-    per-pair plan (one interpreted HOF dot per (query, member) pair,
-    then a corpus-wide window) evaluates queries x nprobe x |cell|
-    interpreted 64-dim dots — ~60M at the x300 probe point, where it
-    measured alpha(100->300) = 1.77. The members shuffle by cell here —
-    at scale that is the materialized inverted file's natural
-    partitioning, and the shuffle is linear in the PROBED cells only
-    (the join drops unprobed cells' blocks)."""
+    Per-cell blocked GEMM with in-kernel per-query top-k partials: each
+    side rank-blocks within its cell, the block join ships bounded
+    payloads, each (query-block, member-block) row is scored in
+    ``COSINE_TILE``-bounded sub-tiles with a per-query RUNNING top-k
+    merged across them (``_VK.topk``), so a task emits at most k rows
+    per query per member block and the final window ranks only
+    ~queries x nprobe x k x blocks candidate rows. A per-pair plan (one
+    interpreted HOF dot per (query, member) pair, then a corpus-wide
+    window) evaluates queries x nprobe x |cell| interpreted 64-dim dots
+    — ~60M at the x300 probe point, where it measured alpha(100->300) =
+    1.77. The members shuffle by cell here — at scale that is the
+    materialized inverted file's natural partitioning, and the shuffle
+    is linear in the PROBED cells only (the join drops unprobed cells'
+    blocks).
+
+    Determinism: sims round to 4 decimals (the documented cross-engine
+    absorption class — dgemm vs the oracle's sequential fold differ by
+    ~1 ulp), member sub-tiles are nid-ascending and every merge orders
+    by (sim DESC, nid ASC), so the union of partial top-ks contains
+    exactly the global top-k the final window selects with the same
+    comparator. Self-pairs (qid == nid) are masked before selection."""
     qb = _cell_rank_blocks(probe_q, "qid", "__q", "__qids", "__qflat")
     mb = _cell_rank_blocks(members, "nid", "__v", "__nids", "__nflat")
+    tile = COSINE_TILE
+
+    def search(batches):
+        import numpy as np
+        import pandas as pd
+
+        PAD_ID = np.iinfo(np.int64).max
+        for pdf in batches:
+            out = []
+            for qids_r, qflat_r, nids_r, nflat_r in zip(
+                pdf["__qids"], pdf["__qflat"], pdf["__nids"], pdf["__nflat"]
+            ):
+                qids, Q, nq = _VK.decode(qids_r, qflat_r)
+                nids, M, nm = _VK.decode(nids_r, nflat_r)
+                for i0 in range(0, len(qids), tile):
+                    i1 = i0 + tile
+                    qs, qv, qn = qids[i0:i1], Q[i0:i1], nq[i0:i1]
+                    run_s = np.full((len(qs), k), -np.inf)
+                    run_i = np.full((len(qs), k), PAD_ID, np.int64)
+                    for j0 in range(0, len(nids), tile):
+                        j1 = j0 + tile
+                        sims = np.round(_VK.cosine(qv, qn, M[j0:j1], nm[j0:j1]), 4)
+                        sims[qs[:, None] == nids[None, j0:j1]] = -np.inf
+                        run_s, run_i = _VK.topk(run_s, run_i, sims, nids[j0:j1], k)
+                    valid = (run_s > -np.inf).ravel()
+                    if valid.any():
+                        out.append(
+                            pd.DataFrame(
+                                {
+                                    "qid": np.repeat(qs, k)[valid],
+                                    "nid": run_i.ravel()[valid],
+                                    "sim": run_s.ravel()[valid],
+                                }
+                            )
+                        )
+            if out:
+                yield pd.concat(out, ignore_index=True)
+
     cand = (
         qb.drop("__blk")
         .join(mb.drop("__blk"), "cell")
-        .mapInPandas(
-            _make_block_topk(k), schema="qid long, nid long, sim double"
-        )
+        .mapInPandas(search, schema="qid long, nid long, sim double")
     )
     w_top = Window.partitionBy("qid").orderBy(
         F.col("sim").desc(), F.col("nid").asc()
@@ -2876,10 +2760,10 @@ def semdedup_dropped(
         corpus = well_formed_vectors(corpus, vec_col, dim)
     if assigned is None:
         assigned = assign_cells(corpus, id_col, vec_col, centroids)
-    # Blocks ship as FLAT PRIMITIVE ARRAYS (ids + row-major flattened
-    # matrix), split out of the collect_list JVM-side — Arrow hands the
-    # Python side two contiguous buffers per block instead of one dict
-    # per vector — and the SHIPPED unit is COSINE_SHIP_TILE wide while
+    # Blocks ship as FLAT PRIMITIVE ARRAYS (``_cell_rank_blocks``: ids +
+    # row-major flattened matrix, split out of the collect_list
+    # JVM-side, so Arrow hands the Python side two contiguous buffers
+    # per block), and the SHIPPED unit is COSINE_SHIP_TILE wide while
     # the GEMM inside each task sub-tiles at COSINE_TILE: the join
     # re-ships every block once per partner block, and that shuffle
     # amplification (not the GEMM — ~3 s of sgemm at the x100 point)
@@ -2888,46 +2772,16 @@ def semdedup_dropped(
     # ::DOUBLE[] cast.
     # Blocks are id-ranges WITHIN the cell (rank over nid), not global
     # nid ranges: a cell's members are scattered across the whole id
-    # space, so floor(nid / SHIP_TILE) blocking put ~n/SHIP_TILE mostly-
-    # tiny blocks in every cell and the self-join's payload re-shipping
-    # went QUADRATIC in corpus size — at the x300 probe point (600k
-    # vectors) every cell touched ~74 global blocks, 2.7k block pairs
-    # per cell, ~160 GB shuffled, and the entry ran 254-295 s with the
-    # verify pinned at 344 s of it (SCALE.md round-11 session 2). Rank
-    # blocking gives ceil(m / SHIP_TILE) blocks per cell — shipping
-    # linear in m — and preserves the property the diagonal skip and
-    # the cross-block id filter rely on: within a cell, every id in
-    # block k is smaller than every id in block k+1.
-    base = (
-        assigned.select(
-            "cell",
-            (
-                F.floor(
-                    (
-                        F.row_number().over(
-                            Window.partitionBy("cell").orderBy("nid")
-                        )
-                        - F.lit(1)
-                    )
-                    / COSINE_SHIP_TILE
-                )
-            ).alias("__blk"),
-            "nid",
-            "__v",
-        )
-        .groupBy("cell", "__blk")
-        # sort_array by nid: the diagonal-super-pair skip in pair_block
-        # assumes both join sides decode a (cell, blk) group in the SAME
-        # element order, and collect_list alone does not promise that
-        # across the join's two executions of this subplan
-        .agg(F.array_sort(F.collect_list(F.struct("nid", "__v"))).alias("__rows"))
-        .select(
-            "cell",
-            "__blk",
-            F.expr("transform(__rows, r -> r.nid)").alias("__ids"),
-            F.expr("flatten(transform(__rows, r -> r.__v))").alias("__flat"),
-        )
-    )
+    # space, so floor(nid / SHIP_TILE) blocking puts ~n/SHIP_TILE
+    # mostly-tiny blocks in every cell and the self-join's payload
+    # re-shipping goes QUADRATIC in corpus size (measured at the x300
+    # probe point, 600k vectors: ~160 GB shuffled, verify 344 s; SCALE.md
+    # round-11 session 2). Rank blocking gives ceil(m / SHIP_TILE)
+    # blocks per cell — shipping linear in m — and preserves the
+    # property the diagonal skip and the cross-block id filter rely on:
+    # within a cell, every id in block k is smaller than every id in
+    # block k+1.
+    base = _cell_rank_blocks(assigned, "nid", "__v", "__ids", "__flat")
     a = base.select(
         "cell",
         F.col("__blk").alias("ba"),
@@ -2946,37 +2800,21 @@ def semdedup_dropped(
 
     # REDUCE, never emit, the pair stream: this operator's output is the
     # per-vector aggregate (n_dups, max_sim), so qualifying pairs fold
-    # into per-id_b partials INSIDE each task (_tile_reduce) and a block
-    # pair emits at most |ids_b| partial rows — the map-side-combine
-    # shape. The former kernel returned one row per qualifying PAIR,
-    # which is quadratic in duplicate-group size: at the x300 probe
-    # point (600k vectors = 2000 base vectors x 300 near-identical
-    # replicas, the boilerplate-cluster shape) ~90M pairs qualified, and
-    # the verify spent 344 s of a 280-380 s entry gathering survivor
-    # rows (|pairs| x dim float64), building pandas pair frames, and
-    # Arrow-shipping + shuffling them — per-row cost alpha_unit ~0.9,
-    # the one cost shape that demands an operator fix (profile:
-    # SCALE.md round-11 session 2). Dense tiles additionally skip the
-    # survivor gather entirely (see DENSE_TILE_FRACTION).
+    # into per-id_b partials INSIDE each task (``_VK.reduce_tile``) and a
+    # block pair emits at most |ids_b| partial rows — the map-side-
+    # combine shape. One row per qualifying PAIR is quadratic in
+    # duplicate-group size: at the x300 probe point (2000 base vectors x
+    # 300 near-identical replicas, the boilerplate-cluster shape) ~90M
+    # pairs qualify, and gathering survivor rows, building pandas pair
+    # frames and shuffling them took 344 s of a 280-380 s entry (SCALE.md
+    # round-11 session 2). Dense tiles additionally skip the survivor
+    # gather entirely (see DENSE_TILE_FRACTION).
+    tile = COSINE_TILE
+
     def reduce_block(batches):
         import numpy as np
         import pandas as pd
 
-        def decode(ids_raw, flat_raw):
-            ids = np.asarray(ids_raw, np.int64)
-            flat = np.asarray(flat_raw, np.float64)
-            # a 0-dim corpus degenerates to (n, 0): dots are 0 -> cosine
-            # 0 under the zero-norm clamp (never pairs), same contract
-            # as the former per-row np.stack shape
-            mat = (
-                flat.reshape(len(ids), -1)
-                if flat.size
-                else np.zeros((len(ids), 0))
-            )
-            norms = np.maximum(np.sqrt((mat * mat).sum(axis=1)), 1e-12)
-            return ids, mat, norms, mat.astype(np.float32)
-
-        T = COSINE_TILE
         for pdf in batches:
             out = []
             for cell, same, ids_ra, flat_ra, ids_rb, flat_rb in zip(
@@ -2984,27 +2822,17 @@ def semdedup_dropped(
                 pdf["ids_a"], pdf["flat_a"],
                 pdf["ids_b"], pdf["flat_b"],
             ):
-                ids_a, mat_a, na, mat_a32 = decode(ids_ra, flat_ra)
-                ids_b, mat_b, nb, mat_b32 = decode(ids_rb, flat_rb)
+                ids_a, mat_a, na = _VK.decode(ids_ra, flat_ra)
+                ids_b, mat_b, nb = _VK.decode(ids_rb, flat_rb)
+                a32, b32 = mat_a.astype(np.float32), mat_b.astype(np.float32)
                 cnt = np.zeros(len(ids_b), np.int64)
                 msim = np.full(len(ids_b), -np.inf)
-                # sub-tile the pair space so the screen matrix is
-                # bounded at T^2 however wide the shipped unit is; on
-                # the diagonal super-pair (same shipped unit both
-                # sides) only the upper sub-triangle is scored — blocks
-                # are id-ranges and rows are nid-sorted, so a
-                # sub-diagonal sub-tile cannot contain id_a < id_b
-                for i0 in range(0, len(ids_a), T):
-                    i1 = i0 + T
-                    for j0 in range(i0 if same else 0, len(ids_b), T):
-                        j1 = j0 + T
-                        _tile_reduce(
-                            mat_a[i0:i1], na[i0:i1],
-                            mat_b[j0:j1], nb[j0:j1], eps,
-                            mat_a32[i0:i1], mat_b32[j0:j1],
-                            ids_a[i0:i1], ids_b[j0:j1],
-                            cnt, msim, j0,
-                        )
+                for sa, sb in _VK.tiles(len(ids_a), len(ids_b), tile, same):
+                    _VK.reduce_tile(
+                        mat_a[sa], na[sa], mat_b[sb], nb[sb], eps,
+                        a32[sa], b32[sb], ids_a[sa], ids_b[sb],
+                        cnt, msim, sb.start,
+                    )
                 upd = cnt > 0
                 if upd.any():
                     out.append(

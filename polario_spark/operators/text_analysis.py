@@ -106,17 +106,18 @@ def filter_flag_exprs(
 
     The Spark top-freq flag is a sorted-run scan — sort the token array,
     then one ``aggregate`` pass tracking the longest run of equal adjacent
-    tokens — O(n log n) per document. (Until round 8 it was
-    ``array_max(transform(dtoks, t -> size(filter(toks, ...))))``:
+    tokens — O(n log n) per document. (The direct form
+    ``array_max(transform(dtoks, t -> size(filter(toks, ...))))`` is
     O(|distinct| x |tokens|) per document, the costliest interpreted HOF
     in the registry; quadratic blows up exactly on the long spammy
-    documents this flag exists to catch.) The DuckDB oracle keeps the
-    transform/filter form — at oracle scale the quadratic is irrelevant
-    and the two shapes are provably the same statistic; ``nullif(.., 0)``
-    pins the Spark side to the same NULL-on-empty-array result
+    documents this flag exists to catch.) The DuckDB oracle takes the
+    max of the token HISTOGRAM (``list_aggregate(.., 'histogram')``, a
+    hash count, O(|tokens|)) — an independent computation of the same
+    statistic, not a replay of the sorted-run scan. ``nullif(.., 0)``
+    pins the Spark side to the oracle's NULL-on-empty-array result
     (``aggregate`` over an empty array returns the init value 0, while
-    ``array_max([])``/``list_max([])`` are NULL — a zero-token doc must
-    not flip to "pass").
+    the histogram of an empty list and ``list_max([])`` are NULL — a
+    zero-token doc must not flip to "pass").
     """
     toks = toks_col or TXT.tokens(text_col, dialect)
     dtoks = dtoks_col or TXT.distinct_tokens(text_col, dialect)
@@ -135,10 +136,7 @@ def filter_flag_exprs(
         )
         n_chars = f"length(replace({TXT.array_join(toks, ' ', 'spark')}, ' ', ''))"
     else:
-        top_freq = (
-            f"list_max(list_transform({dtoks}, "
-            f"t -> len(list_filter({toks}, x -> x = t))))"
-        )
+        top_freq = f"list_max(map_values(list_aggregate({toks}, 'histogram')))"
         n_chars = f"length(replace(array_to_string({toks}, ' '), ' ', ''))"
     as_int = (lambda e: f"({e})::INT") if dialect == "duckdb" else (
         lambda e: f"cast(({e}) as int)"

@@ -34,15 +34,10 @@ def ensure_parallelism(df: DataFrame, min_partitions: Optional[int] = None) -> D
     on a cluster — so operators can call it unconditionally.
 
     The partition-count probe (``df.rdd.getNumPartitions()``) forces a
-    physical plan conversion per call — milliseconds, but pure overhead on
-    clusters whose inputs are always wide. Set
-    ``spark.polario.ensureParallelism=off`` there to make this a true
-    no-op; the default ``auto`` keeps the guard for small/fixture inputs.
+    physical plan conversion per call: milliseconds, paid once per
+    operator call at plan-build time.
     """
-    spark = df.sparkSession
-    if spark.conf.get("spark.polario.ensureParallelism", "auto") == "off":
-        return df
-    target = min_partitions or spark.sparkContext.defaultParallelism
+    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)

@@ -2848,25 +2848,18 @@ def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — proving the CSV path preserves values exactly."""
     from polario_spark.plans.parallelism import ensure_parallelism
 
-    # Round 15 (opt): the bench corpus is one single-row-group file, so
-    # the CSV write ran as ONE task producing ONE file — which the
-    # multiLine (RFC 4180) read-back then parsed single-threaded too
-    # (multiLine CSV files are unsplittable). Parallelizing the write
-    # input fixes both sides; identity on real multi-file inputs.
-    # Float-rounding boundary note (r15 ADVICE, the text_quality hazard
-    # class): the declared result rounds a float sum(double) at 2
-    # decimals, and partial-sum order is partition-dependent — but the
-    # ORACLE already sums the same doubles in DuckDB's own (different)
-    # order, so boundary sensitivity is inherent to the declared
-    # round(sum(double)) semantics, not introduced by this guard; the
-    # two engines agree iff the group sum is >1 ulp from a .xx5
-    # boundary, which the dup-id/skew adversary corpora exercise for
-    # these entries. Unlike text_quality (a MEAN of per-doc ratios at 4
-    # decimals, ulp-sized gaps), these are cent-valued sums rounded at
-    # the 2nd decimal — the rounding argument lands ~10 orders of
-    # magnitude from the ulp. spark.polario.ensureParallelism=off
-    # restores single-partition sums if a pathological corpus ever
-    # trips one.
+    # A single-row-group input would write the CSV as ONE task and ONE
+    # file, which the multiLine (RFC 4180) read-back then parses
+    # single-threaded too (multiLine CSV files are unsplittable).
+    # Parallelizing the write input fixes both sides; identity on real
+    # multi-file inputs. Float rounding: the declared result rounds a
+    # sum(double) at 2 decimals and partial-sum order is
+    # partition-dependent, but the ORACLE sums the same doubles in its
+    # own order anyway, so boundary sensitivity is inherent to the
+    # declared round(sum(double)), not introduced by this guard. These
+    # are cent-valued sums rounded at the 2nd decimal, ~10 orders of
+    # magnitude from the ulp; the dup-id/skew adversary corpora exercise
+    # them.
     orders = ensure_parallelism(
         _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", F.col("o_totalprice").cast("string")
@@ -5616,21 +5609,17 @@ def federated_three_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
 #      the earlier hand-curated _DRIVER_GREEN back-list, which required
 #      manual rotation every round.
 _PRIORITY = [
-    # Round-16 code changes (kept small per the r7 ruling so the
-    # stalest-green rotation keeps refreshing old rows): the IVF family
-    # gained the fused centroid job + overlapped index writes, kmeans
-    # the fused init, semantic_dedup the fused assignment job, minhash
-    # the array-signature join, dedup_clusters the projection round 0,
-    # incremental_rollup the shared daily aggregate, and ngram the
-    # hardened pin dial.
+    # these entries run the shared numpy vector kernels or the top-freq
+    # oracle, both rewritten since their latest green CORRECTNESS row
+    "dedup_embedding_cosine",
+    "dedup_embedding_cosine_lsh",
+    "dedup_embedding_cosine_lsh_loose",
+    "dedup_embedding_cosine_lsh_sized",
+    "semantic_dedup",
     "ann_ivf_topk",
     "ann_ivf_quantized_topk",
     "ann_ivf_kmeans_topk",
-    "semantic_dedup",
-    "dedup_minhash",
-    "dedup_clusters",
-    "incremental_rollup",
-    "dedup_ngram_jaccard",
+    "quality_filter_funnel",
 ]
 
 

@@ -30,16 +30,6 @@ from pyspark.sql import types as T
 STATE_PARTITIONS = 8
 
 
-@contextmanager
-def _state_partitions(spark: SparkSession, n: int = STATE_PARTITIONS):
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
 def _assert_no_data_batch_safe(
     sink: DataFrame, output_mode: str, allow_watermark_gated_append: bool
 ) -> None:
@@ -88,8 +78,8 @@ def _drain_conf(
     allow_watermark_gated_append: bool = False,
 ):
     """Conf scope for the registry entries' finite drain-to-completion
-    queries: state partition sizing (see ``_state_partitions``) plus
-    ``noDataMicroBatches.enabled=false`` (round 15 opt).
+    queries: ``n`` shuffle/state partitions (see ``STATE_PARTITIONS``)
+    plus ``noDataMicroBatches.enabled=false``.
 
     After the data batch of a finite drain, Spark runs one more ZERO-ROW
     micro-batch purely to advance the watermark (evict state, emit

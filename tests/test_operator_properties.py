@@ -510,7 +510,7 @@ def test_screened_kernel_matches_plain_float64(seed):
     ia_p, ib_p = np.nonzero(sim_plain >= thr)
     plain = sorted(zip(ia_p, ib_p, sim_plain[ia_p, ib_p]))
 
-    ia, ib, sim = similarity._screened_tile_sims(
+    ia, ib, sim = similarity._VK.screened(
         A, na, B, nb, thr, A.astype(np.float32), B.astype(np.float32)
     )
     got = sorted(zip(ia, ib, sim))
@@ -576,7 +576,7 @@ def test_tile_reduce_matches_bruteforce_aggregation(seed):
         i1 = i0 + T
         for j0 in range(0, n_b, T):
             j1 = j0 + T
-            similarity._tile_reduce(
+            similarity._VK.reduce_tile(
                 A[i0:i1], na[i0:i1], B[j0:j1], nb[j0:j1], thr,
                 A32[i0:i1], B32[j0:j1],
                 ids_a[i0:i1], ids_b[j0:j1], cnt, msim, j0,

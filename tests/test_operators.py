@@ -182,12 +182,11 @@ def test_quality_filter_flags(spark):
 
 
 def test_top_freq_sorted_run_matches_quadratic(spark):
-    """The round-8 sorted-run top-freq rewrite must be extensionally equal
-    to the O(|distinct| x |tokens|) transform/filter form it replaced (the
-    form the DuckDB oracle still uses), including NULL on a zero-token
-    document — ``aggregate`` over an empty array returns its init value 0
-    where ``array_max([])`` is NULL, and a NULL flag must stay NULL so an
-    empty doc never counts as passing."""
+    """The sorted-run top-freq flag must be extensionally equal to the
+    O(|distinct| x |tokens|) transform/filter form, including NULL on a
+    zero-token document — ``aggregate`` over an empty array returns its
+    init value 0 where ``array_max([])`` is NULL, and a NULL flag must
+    stay NULL so an empty doc never counts as passing."""
     import random
 
     rng = random.Random(8)
@@ -208,6 +207,36 @@ def test_top_freq_sorted_run_matches_quadratic(spark):
     assert bad.count() == 0
     empties = df.filter("doc_id >= 1000").selectExpr(f"{new} as f").collect()
     assert all(r.f is None for r in empties)
+
+
+def test_top_freq_histogram_matches_quadratic_duckdb():
+    """The DuckDB oracle's top-freq flag (max of the token histogram)
+    must equal the O(|distinct| x |tokens|) list_transform/list_filter
+    form it replaced, including NULL on a zero-token document."""
+    import random
+
+    import duckdb
+
+    rng = random.Random(8)
+    vocab = [f"w{i}" for i in range(12)]
+    docs = [(i, " ".join(rng.choices(vocab, k=rng.randrange(0, 60)))) for i in range(200)]
+    docs += [(1000, ""), (1001, "   .,;")]  # tokenize to empty arrays
+    con = duckdb.connect()
+    con.execute("CREATE TABLE d (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO d VALUES (?, ?)", docs)
+    new = text_analysis.filter_flag_exprs("text", "duckdb")["pass_top_freq"]
+    toks = text.tokens("text", "duckdb")
+    dtoks = text.distinct_tokens("text", "duckdb")
+    old = (
+        f"((list_max(list_transform({dtoks}, "
+        f"t -> len(list_filter({toks}, x -> x = t))))) * 5 <= len({toks}))::INT"
+    )
+    bad = con.sql(
+        f"SELECT doc_id FROM d WHERE ({new}) IS DISTINCT FROM ({old})"
+    ).fetchall()
+    assert bad == []
+    empties = con.sql(f"SELECT {new} FROM d WHERE doc_id >= 1000").fetchall()
+    assert empties == [(None,), (None,)]
 
 
 def test_zorder_tightens_file_ranges(spark, tmp_path):
@@ -472,7 +501,7 @@ def test_ivf_kmeans_centroids_deterministic_and_recall(spark):
     assert recall_km >= recall_stride - 1e-9, (recall_km, recall_stride)
 
 
-def test_assign_cells_gemm_matches_fold(spark):
+def test_assign_cells_gemm_matches_fold(spark, monkeypatch):
     """The GEMM assignment (round 10) must agree with the pure-JVM fold
     reference cell-for-cell on the fixture, for both the stride and the
     Lloyd-refined centroid sets. The two differ only where a BLAS-vs-fold
@@ -503,16 +532,19 @@ def test_assign_cells_gemm_matches_fold(spark):
         assert len(gemm) == 500
 
     # exact-tie tie-break: two centroids with IDENTICAL vectors -> every
-    # row's cosines tie bitwise, and both paths must pick the SMALLER cid
+    # row's cosines tie bitwise, and both paths must pick the SMALLER cid;
+    # a one-centroid block puts the tie across blocks (strict > update)
     rows = [(i, [float(i % 7 + 1), 1.0, -0.5]) for i in range(20)]
     tiny = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     cent = spark.createDataFrame(
         [(3, [1.0, 2.0, 0.0]), (9, [1.0, 2.0, 0.0])],
         "cid long, __cent array<double>",
     )
-    for fn in (similarity.assign_cells, similarity.assign_cells_fold):
-        cells = {r.nid: r.cell for r in fn(tiny, centroids=cent).collect()}
-        assert set(cells.values()) == {3}, fn.__name__
+    for block in (similarity.ASSIGN_CENT_BLOCK, 1):
+        monkeypatch.setattr(similarity, "ASSIGN_CENT_BLOCK", block)
+        for fn in (similarity.assign_cells, similarity.assign_cells_fold):
+            cells = {r.nid: r.cell for r in fn(tiny, centroids=cent).collect()}
+            assert set(cells.values()) == {3}, (fn.__name__, block)
 
 
 def test_kmeans_partial_means_match_numpy_lloyd(spark):
@@ -878,14 +910,11 @@ def test_probe_cells_gemm_matches_window_plan(spark):
         assert cells == {3, 9}, (qid, cells)
 
 
-def test_probe_cells_block_seam_merge(spark):
-    """Force the running top-P merge across GEMM blocks: more centroids
-    than ASSIGN_CENT_BLOCK would be too slow for a unit test, so shrink
-    the block via monkeypatched constant? No — the kernel reads the
-    module constant at closure build; instead verify with K just over a
-    hand-tiled path: a 5-centroid set where each query's two best cells
-    sit in DIFFERENT halves of the cid range, computed against a numpy
-    reference."""
+def test_probe_cells_block_seam_merge(spark, monkeypatch):
+    """Force the running top-P merge across GEMM blocks: the plan reads
+    ASSIGN_CENT_BLOCK when it is built, so a 2-centroid block splits a
+    5-centroid set into three blocks, and each query's two best cells
+    are merged across them; checked against a numpy reference."""
     import numpy as np
 
     rng = np.random.default_rng(11)
@@ -897,6 +926,7 @@ def test_probe_cells_block_seam_merge(spark):
         [(int(c), [float(x) for x in cmat[c]]) for c in range(5)],
         "cid long, __cent array<double>",
     )
+    monkeypatch.setattr(similarity, "ASSIGN_CENT_BLOCK", 2)
     got = {}
     for r in similarity.probe_cells(df, centroids=cent).collect():
         got.setdefault(r.qid, set()).add(r.cell)

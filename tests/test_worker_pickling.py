@@ -34,7 +34,12 @@ PY_STAGE_ENTRIES = [
     "streaming_stateful_sessions",
     "dedup_embedding_cosine",
     "dedup_embedding_cosine_lsh",
+    "dedup_embedding_cosine_lsh_loose",
+    "dedup_embedding_cosine_lsh_sized",
     "semantic_dedup",
+    "ann_ivf_topk",
+    "ann_ivf_quantized_topk",
+    "ann_ivf_kmeans_topk",
 ]
 
 DRIVER = r"""
