@@ -1,4 +1,5 @@
 from polario_spark.plans.explain import (
+    codegen_compiles,
     formatted_plan,
     has_broadcast_join,
     pushed_filters,
@@ -7,6 +8,7 @@ from polario_spark.plans.explain import (
 from polario_spark.plans.residue import release_cached_residue
 
 __all__ = [
+    "codegen_compiles",
     "formatted_plan",
     "pushed_filters",
     "scan_read_schema",

@@ -28,6 +28,23 @@ under the temp root. Sessions on a non-local master (whose executors lack
 the jar, and whose writes go to S3A/HDFS, which never fork), hosts without
 ``javac``, and driver JVMs that cannot load the class keep the stock
 filesystem.
+
+Partition listing: Spark lists a directory level of more than 32 entries
+with a Spark job (``spark.sql.sources.parallelPartitionDiscovery.threshold``),
+so every ``HiveDataset.scan()`` and ``compact()`` over 64 partitions ran a
+64-task job just to list them. On a local master those tasks run in the
+driver's JVM against the same disk, so the threshold is raised to the
+largest int there and the driver lists serially. Non-local masters keep
+Spark's parallel listing, which object stores need at scale.
+
+Generated-code cache: on every master, since the driver's compile work
+does not depend on the master, Spark's cache of compiled generated classes
+(``spark.sql.codegen.cache.maxEntries``, default 100) holds
+``CODEGEN_CACHE_ENTRIES``, sized from the registry's measured working set.
+No data or result is cached: only the compiled code of a plan already
+seen is reused.
+
+A caller's ``extra_conf`` wins over each of these defaults.
 """
 
 from __future__ import annotations
@@ -58,6 +75,16 @@ NOFORK_FS_SOURCE = os.path.join(
 )
 NOFORK_FS_CLASS = "polario_spark.jvm.NoForkLocalFileSystem"
 _CLASSPATH = "spark.driver.extraClassPath"
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+#: Generated classes Spark keeps compiled (``spark.sql.codegen.cache.maxEntries``,
+#: Spark's default 100). One pass over the 119 registry entries at sf0.01
+#: compiles 1,437 distinct classes, the 10 timed perfbench ``registry``
+#: entries alone 176, so at 100 every pass evicts and recompiles them all
+#: (1,975 compiles per pass over the registry). Holding them, a second pass
+#: compiles only the 38 classes that carry per-run literals; 4096 holds the
+#: whole registry with headroom.
+CODEGEN_CACHE_ENTRIES = 4096
 _KEEPS_STOCK_FS = "file:// keeps the stock Hadoop filesystem"
 
 
@@ -151,18 +178,22 @@ def _driver_can_load(cls: str) -> bool:
     return True
 
 
-def _with_nofork_fs(master: str, conf: dict[str, str]) -> dict[str, str]:
-    """``conf`` plus what makes ``file://`` the fork-free filesystem on a
-    local master: the jar appended to the caller's driver classpath, and
-    ``fs.file.impl`` (unless the caller set one) when the driver JVM can
-    load the class. Elsewhere ``conf`` unchanged, with one log line."""
+def _with_local_master_conf(master: str, conf: dict[str, str]) -> dict[str, str]:
+    """``conf`` plus the defaults that only fit a local master: serial
+    listing of partition directories, and what makes ``file://`` the
+    fork-free filesystem (the jar appended to the caller's driver
+    classpath, and ``fs.file.impl`` when the driver JVM can load the
+    class). A key the caller set keeps its value. Elsewhere ``conf``
+    unchanged, with one log line."""
     if master != "local" and not master.startswith("local["):
         _log.info("master %s is not local: %s", master, _KEEPS_STOCK_FS)
         return conf
+    # partition directories are listed on the driver: see the module docstring
+    conf = {_LISTING_THRESHOLD: str(2**31 - 1), **conf}
     jar = _nofork_fs_jar()
     if jar is None:
         return conf
-    conf = {**conf, _CLASSPATH: os.pathsep.join(filter(None, (conf.get(_CLASSPATH), jar)))}
+    conf[_CLASSPATH] = os.pathsep.join(filter(None, (conf.get(_CLASSPATH), jar)))
     if _driver_can_load(NOFORK_FS_CLASS):
         conf.setdefault("spark.hadoop.fs.file.impl", NOFORK_FS_CLASS)
     else:
@@ -170,6 +201,50 @@ def _with_nofork_fs(master: str, conf: dict[str, str]) -> dict[str, str]:
             "the running driver JVM cannot load %s: %s", NOFORK_FS_CLASS, _KEEPS_STOCK_FS
         )
     return conf
+
+
+def _session_conf(
+    master: str, shuffle_partitions: int, extra_conf: dict[str, str]
+) -> dict[str, str]:
+    """Every conf ``get_spark`` sets on a session of ``master``; the
+    caller's ``extra_conf`` wins over each default."""
+    conf = {
+        # -- shuffle & adaptive execution -------------------------------
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        # -- driver-side compile: see CODEGEN_CACHE_ENTRIES -------------
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
+        # -- oracle comparability ---------------------------------------
+        "spark.sql.session.timeZone": "UTC",
+        # -- python <-> jvm transfer ------------------------------------
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        # -- reference dataset-layout semantics -------------------------
+        # partition values always read back as strings
+        # (/root/reference/polario/hive_dataset.py:366-370)
+        "spark.sql.sources.partitionColumnTypeInference.enabled": "false",
+        # HiveDataset.write overwrites only the partitions present in the
+        # input frame (/root/reference/polario/hive_dataset.py:412-415)
+        "spark.sql.sources.partitionOverwriteMode": "dynamic",
+        # snappy parquet (/root/reference/polario/hive_dataset.py:19-22)
+        "spark.sql.parquet.compression.codec": "snappy",
+        "spark.sql.parquet.mergeSchema": "false",
+        # events.parquet carries INT64 TIMESTAMP(NANOS) which Spark's parquet
+        # reader rejects by default; read as ns-since-epoch longs and convert
+        # in polario_spark.sources.tables.load_events
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        # driver-regenerated testdata carries untagged TIMESTAMP(MICROS);
+        # Spark 4 infers TIMESTAMP_NTZ for those by default, which
+        # unix_micros/withWatermark reject. Read them as TIMESTAMP (UTC
+        # session tz makes the instant identical to the old ns-long path).
+        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+        "spark.ui.enabled": "false",
+        # half of host (or cgroup) memory, 1g-32g: see default_driver_memory
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+        or default_driver_memory(host_memory_bytes()),
+    }
+    return _with_local_master_conf(master, {**conf, **extra_conf})
 
 
 def get_spark(
@@ -189,48 +264,11 @@ def get_spark(
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-
-    builder = (
+    spark = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        # -- shuffle & adaptive execution -------------------------------
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # -- oracle comparability ---------------------------------------
-        .config("spark.sql.session.timeZone", "UTC")
-        # -- python <-> jvm transfer ------------------------------------
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # -- reference dataset-layout semantics -------------------------
-        # partition values always read back as strings
-        # (/root/reference/polario/hive_dataset.py:366-370)
-        .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-        # HiveDataset.write overwrites only the partitions present in the
-        # input frame (/root/reference/polario/hive_dataset.py:412-415)
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        # snappy parquet (/root/reference/polario/hive_dataset.py:19-22)
-        .config("spark.sql.parquet.compression.codec", "snappy")
-        .config("spark.sql.parquet.mergeSchema", "false")
-        # events.parquet carries INT64 TIMESTAMP(NANOS) which Spark's parquet
-        # reader rejects by default; read as ns-since-epoch longs and convert
-        # in polario_spark.sources.tables.load_events
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # driver-regenerated testdata carries untagged TIMESTAMP(MICROS);
-        # Spark 4 infers TIMESTAMP_NTZ for those by default, which
-        # unix_micros/withWatermark reject. Read them as TIMESTAMP (UTC
-        # session tz makes the instant identical to the old ns-long path).
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .config("spark.ui.enabled", "false")
-        # half of host (or cgroup) memory, 1g-32g: see default_driver_memory
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
-            or default_driver_memory(host_memory_bytes()),
-        )
+        .config(map=_session_conf(master, shuffle_partitions, extra_conf or {}))
+        .getOrCreate()
     )
-    for key, value in _with_nofork_fs(master, extra_conf or {}).items():
-        builder = builder.config(key, value)
-    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -1,5 +1,7 @@
-"""get_spark's host-fitted defaults: the driver heap, and the local
-filesystem that sets permissions without forking chmod."""
+"""get_spark's defaults: the host-fitted driver heap, the local
+filesystem that sets permissions without forking chmod, serial partition
+listing on local masters, and a codegen cache that holds the registry's
+working set."""
 
 from __future__ import annotations
 
@@ -12,8 +14,11 @@ import sys
 
 from pyspark.sql import functions as F
 
+import __spark_entry__
 from polario_spark import HiveDataset
 from polario_spark import session as S
+from polario_spark.plans import codegen_compiles
+from polario_spark.queries import _GATE_SF_DIR
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -128,12 +133,12 @@ def test_rename_onto_a_file_matches_the_stock_filesystem(spark, tmp_path):
 
 
 def test_nofork_conf_keeps_the_callers_classpath_and_filesystem(spark):
-    conf = S._with_nofork_fs("local[2]", {"spark.driver.extraClassPath": "/a.jar"})
+    conf = S._with_local_master_conf("local[2]", {"spark.driver.extraClassPath": "/a.jar"})
     first, jar = conf["spark.driver.extraClassPath"].split(os.pathsep)
     assert first == "/a.jar" and os.path.isfile(jar)
     assert conf["spark.hadoop.fs.file.impl"] == S.NOFORK_FS_CLASS
     mine = {"spark.hadoop.fs.file.impl": "org.apache.hadoop.fs.LocalFileSystem"}
-    assert S._with_nofork_fs("local", mine)["spark.hadoop.fs.file.impl"] == (
+    assert S._with_local_master_conf("local", mine)["spark.hadoop.fs.file.impl"] == (
         "org.apache.hadoop.fs.LocalFileSystem"
     )
     assert not S._driver_can_load("polario_spark.jvm.NoSuchClass")
@@ -142,8 +147,96 @@ def test_nofork_conf_keeps_the_callers_classpath_and_filesystem(spark):
 def test_non_local_master_keeps_the_stock_filesystem(caplog):
     with caplog.at_level(logging.INFO, logger=S.__name__):
         for master in ("spark://host:7077", "yarn", "local-cluster[2,1,1024]"):
-            assert S._with_nofork_fs(master, {"k": "v"}) == {"k": "v"}
+            assert S._with_local_master_conf(master, {"k": "v"}) == {"k": "v"}
     assert len(caplog.records) == 3
+
+
+_CODEGEN_CACHE = "spark.sql.codegen.cache.maxEntries"
+
+
+def test_listing_threshold_is_local_only_and_callers_keep_their_values():
+    local = S._session_conf("local[2]", 4, {})
+    assert local[S._LISTING_THRESHOLD] == str(2**31 - 1)
+    assert local[_CODEGEN_CACHE] == str(S.CODEGEN_CACHE_ENTRIES)
+    cluster = S._session_conf("spark://host:7077", 4, {})
+    assert S._LISTING_THRESHOLD not in cluster
+    assert cluster[_CODEGEN_CACHE] == str(S.CODEGEN_CACHE_ENTRIES)
+    mine = {S._LISTING_THRESHOLD: "8", _CODEGEN_CACHE: "250"}
+    for master in ("local[2]", "spark://host:7077"):
+        conf = S._session_conf(master, 4, mine)
+        assert (conf[S._LISTING_THRESHOLD], conf[_CODEGEN_CACHE]) == ("8", "250"), master
+
+
+def _job_descriptions(spark, run) -> list[str]:
+    """The descriptions of the Spark jobs ``run()`` starts, found by a
+    job group."""
+    sc = spark.sparkContext
+    group = f"probe-{os.urandom(4).hex()}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(30_000)
+    store = jsc.statusStore()
+    descriptions = (
+        store.job(job_id).description() for job_id in sc.statusTracker().getJobIdsForGroup(group)
+    )
+    return [d.get() if d.isDefined() else "" for d in descriptions]
+
+
+def test_local_scan_lists_partitions_without_a_spark_job(spark, tmp_path):
+    ds = HiveDataset(spark, str(tmp_path / "ds"), ["part"])
+    ds.write(
+        spark.range(0, 640, numPartitions=2).select(
+            "id", (F.col("id") % 64).cast("string").alias("part")
+        )
+    )
+    listing = "Listing leaf files and directories"
+    frames = []
+    jobs = _job_descriptions(spark, lambda: frames.append(ds.scan()))
+    assert not [d for d in jobs if d.startswith(listing)], jobs
+    assert frames[0].count() == 640
+    # the same scan at Spark's default threshold (32 < 64 directories)
+    # lists with a job, which the probe sees
+    stock = spark.newSession()
+    stock.conf.set(S._LISTING_THRESHOLD, "32")
+    stock_ds = HiveDataset(stock, str(tmp_path / "ds"), ["part"])
+    jobs = _job_descriptions(stock, stock_ds.scan)
+    assert [d for d in jobs if d.startswith(listing)], jobs
+
+
+# the sf0.001 corpus beside the sf0.01 gate corpus
+_SMALL_SF_DIR = os.path.join(os.path.dirname(_GATE_SF_DIR), "sf0.001")
+# Registry entries whose generated classes carry no per-run literal; at
+# sf0.001 one pass over them compiles 142 classes, more than Spark's
+# default cache of 100 holds, so at that default a repeat pass compiles
+# about 120 of them again.
+_NO_LITERAL_ENTRIES = (
+    "udtf_repeated_tokens",
+    "events_props_map",
+    "asof_click_before_purchase",
+    "rollup_sales",
+    "dedup_simhash",
+    "streaming_events_hourly",
+    "multimodal_features",
+    "dedup_embedding_cosine",
+    "text_quality",
+)
+
+
+def test_a_repeat_pass_over_registry_entries_compiles_nothing(spark):
+    queries = __spark_entry__.queries()
+
+    def one_pass() -> int:
+        before = codegen_compiles(spark)
+        for name in _NO_LITERAL_ENTRIES:
+            queries[name](spark, _SMALL_SF_DIR).collect()
+        return codegen_compiles(spark) - before
+
+    one_pass()
+    assert one_pass() == 0
 
 
 _FALLBACK = """

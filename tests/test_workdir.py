@@ -2,16 +2,18 @@
 
 from __future__ import annotations
 
+import os
+
 from polario_spark import queries as Q
 from polario_spark.workdir import work_dir
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_work_dir_gives_fresh_path_per_invocation(spark):
     a = work_dir(spark, "unit-kind")
     b = work_dir(spark, "unit-kind")
     assert a != b
-    import os
-
     assert os.path.isdir(a) and os.path.isdir(b)
 
 
@@ -32,7 +34,7 @@ def test_concurrent_stable_writer_warns(tmp_path):
             sys.executable,
             "-c",
             (
-                "import sys, time; sys.path.insert(0, '/root/repo'); "
+                f"import sys, time; sys.path.insert(0, {REPO!r}); "
                 "from polario_spark.workdir import prepare_stable_dir; "
                 f"prepare_stable_dir({path!r}); print('locked', flush=True); "
                 "time.sleep(30)"
@@ -96,8 +98,6 @@ def test_rebind_stable_paths_raises_on_tag_drift():
     artifacts (the exact bug class corpus keying fixed). SQL with no
     stable-path literals at all still passes through untouched, and a
     matching tag still rebinds."""
-    import os
-
     import pytest
 
     from polario_spark.workdir import (
@@ -124,7 +124,7 @@ def test_rebind_stable_paths_raises_on_tag_drift():
 
 _RACE_CHILD = """
 import os, sys
-sys.path.insert(0, '/root/repo')
+sys.path.insert(0, sys.argv[4])
 from polario_spark.workdir import prepare_stable_dir, stable_work_path
 tag, corpus, iters = sys.argv[1], sys.argv[2], int(sys.argv[3])
 path = stable_work_path('race_kind', corpus)
@@ -169,7 +169,7 @@ def test_two_process_different_corpora_never_interleave(tmp_path):
     corpus_b.mkdir()
     procs = [
         subprocess.Popen(
-            [sys.executable, "-c", _RACE_CHILD, tag, str(corpus), "20000"],
+            [sys.executable, "-c", _RACE_CHILD, tag, str(corpus), "20000", REPO],
             stdout=subprocess.PIPE,
             stderr=subprocess.STDOUT,
         )

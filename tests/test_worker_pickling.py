@@ -22,8 +22,11 @@ they are left to the 117-entry driver gate.
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 PY_STAGE_ENTRIES = [
     "multimodal_features",
@@ -44,7 +47,7 @@ PY_STAGE_ENTRIES = [
 
 DRIVER = r"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {repo!r})
 import __spark_entry__ as e
 from polario_spark import get_spark
 spark = get_spark("pathless_worker_probe")
@@ -57,7 +60,7 @@ for name in {entries!r}:
 
 def test_python_stage_entries_run_with_pathless_workers(tmp_path):
     proc = subprocess.run(
-        [sys.executable, "-c", DRIVER.format(entries=PY_STAGE_ENTRIES)],
+        [sys.executable, "-c", DRIVER.format(repo=REPO, entries=PY_STAGE_ENTRIES)],
         cwd=tmp_path,
         capture_output=True,
         text=True,
