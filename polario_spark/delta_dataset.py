@@ -22,11 +22,12 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.errors import AnalysisException
 
 from polario_spark.hive_dataset import (
     DatasetUrl,
+    check_partition_columns,
+    check_partition_keys,
     guard_partition_values,
     materialize_if_self_read,
 )
@@ -58,24 +59,6 @@ class _TableDatasetBase:
         self.url = DatasetUrl(url)
         self.partition_columns = list(partition_columns or [])
 
-    def _check(self, df: DataFrame) -> None:
-        missing = set(self.partition_columns) - set(df.columns)
-        if missing:
-            raise ValueError(
-                f"Partition columns {sorted(missing)} not in frame columns"
-            )
-        if len(df.columns) <= len(self.partition_columns):
-            raise ValueError(
-                "DataFrame must contain at least one non-partition column"
-            )
-        for field in df.schema.fields:
-            if field.name in self.partition_columns and not isinstance(
-                field.dataType, T.StringType
-            ):
-                raise ValueError(
-                    f"Partition column {field.name!r} must be a string"
-                )
-
     def _writer(self, df: DataFrame, mode: str):
         # same silent NULL/'' -> __HIVE_DEFAULT_PARTITION__ rewrite as the
         # hive layer; refuse loudly inside the write job instead
@@ -89,7 +72,7 @@ class _TableDatasetBase:
         """FULL-table overwrite (/root/reference/polario/delta_dataset.py:23-39)
         — unlike HiveDataset.write, untouched partitions are dropped too, so
         force static overwrite regardless of the session's dynamic default."""
-        self._check(df)
+        check_partition_columns(df, self.partition_columns)
         if self.format == "parquet":
             # delta overwrites are transactional (new files + log commit,
             # old snapshot stays readable); plain parquet is not — guard
@@ -101,7 +84,7 @@ class _TableDatasetBase:
 
     def append(self, df: DataFrame) -> None:
         """Append (/root/reference/polario/delta_dataset.py:20-21)."""
-        self._check(df)
+        check_partition_columns(df, self.partition_columns)
         self._writer(df, "append").save(self.url.spark_url)
 
     def scan(self) -> Optional[DataFrame]:
@@ -117,11 +100,7 @@ class _TableDatasetBase:
     def read_partition(self, partition_values: dict[str, str]) -> Optional[DataFrame]:
         """Partition-filtered read; pruning is pushed to the source
         (/root/reference/polario/delta_dataset.py:41-54)."""
-        if set(partition_values) != set(self.partition_columns):
-            raise ValueError(
-                f"Partition keys {sorted(partition_values)} do not match "
-                f"{self.partition_columns}"
-            )
+        check_partition_keys(partition_values, self.partition_columns)
         df = self.scan()
         if df is None:
             return None

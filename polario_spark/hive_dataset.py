@@ -230,6 +230,39 @@ def _norm_location(uri_or_path: str) -> str:
     return parts.netloc + parts.path
 
 
+def check_partition_columns(df: DataFrame, partition_columns: list[str]) -> None:
+    """Write-side frame validation shared by the dataset layers (the
+    reference polario's hive_dataset.py:358-370): every partition column
+    present and string-typed, plus at least one data column."""
+    missing = set(partition_columns) - set(df.columns)
+    if missing:
+        raise ValueError(
+            f"Partition columns {sorted(missing)} not found in frame columns "
+            f"{df.columns}"
+        )
+    if len(df.columns) <= len(partition_columns):
+        raise ValueError("DataFrame must contain at least one non-partition column")
+    for field in df.schema.fields:
+        if field.name in partition_columns and not isinstance(
+            field.dataType, T.StringType
+        ):
+            raise ValueError(
+                f"Partition column {field.name!r} must be a string, "
+                f"got {field.dataType.simpleString()}"
+            )
+
+
+def check_partition_keys(
+    partition_values: dict[str, str], partition_columns: list[str]
+) -> None:
+    """A partition address must name exactly the partition columns."""
+    if set(partition_values) != set(partition_columns):
+        raise ValueError(
+            f"Partition keys {sorted(partition_values)} do not match dataset "
+            f"partition columns {partition_columns}"
+        )
+
+
 def materialize_if_self_read(df: DataFrame, url: DatasetUrl) -> DataFrame:
     """Barrier a frame that reads from the dataset it is about to
     overwrite.
@@ -281,29 +314,6 @@ class HiveDataset:
         self.url = DatasetUrl(url)
         self.partition_columns = list(partition_columns or [])
         self.max_rows_per_fragment = max_rows_per_fragment
-
-    # ------------------------------------------------------------------
-    # validation (/root/reference/polario/hive_dataset.py:358-370)
-    # ------------------------------------------------------------------
-    def _check_partition_columns(self, df: DataFrame) -> None:
-        missing = set(self.partition_columns) - set(df.columns)
-        if missing:
-            raise ValueError(
-                f"Partition columns {sorted(missing)} not found in frame columns "
-                f"{df.columns}"
-            )
-        if len(df.columns) <= len(self.partition_columns):
-            raise ValueError(
-                "DataFrame must contain at least one non-partition column"
-            )
-        for field in df.schema.fields:
-            if field.name in self.partition_columns and not isinstance(
-                field.dataType, T.StringType
-            ):
-                raise ValueError(
-                    f"Partition column {field.name!r} must be a string, "
-                    f"got {field.dataType.simpleString()}"
-                )
 
     def _data_columns(self, df: DataFrame) -> list[str]:
         """Non-partition columns, sorted alphabetically — the reference's
@@ -358,14 +368,14 @@ class HiveDataset:
         skipping on range predicates — the clustering lever for 100 TB
         scans.
         """
-        self._check_partition_columns(df)
+        check_partition_columns(df, self.partition_columns)
         df = materialize_if_self_read(df, self.url)
         self._writer(df, sort_by).mode("overwrite").parquet(self.url.spark_url)
 
     def append(self, df: DataFrame) -> None:
         """Append fragments to each touched partition
         (/root/reference/polario/hive_dataset.py:417-420)."""
-        self._check_partition_columns(df)
+        check_partition_columns(df, self.partition_columns)
         self._writer(df).mode("append").parquet(self.url.spark_url)
 
     def compact(
@@ -456,13 +466,6 @@ class HiveDataset:
             values[expected_key] = unescape_partition_value(match["value"])
         return values
 
-    def _validate_keys(self, partition_values: dict[str, str]) -> None:
-        if set(partition_values) != set(self.partition_columns):
-            raise ValueError(
-                f"Partition keys {sorted(partition_values)} do not match dataset "
-                f"partition columns {self.partition_columns}"
-            )
-
     def _partition_rel_path(self, partition_values: dict[str, str]) -> str:
         return "/".join(
             f"{k}={escape_partition_value(partition_values[k])}"
@@ -501,7 +504,7 @@ class HiveDataset:
 
         Static partition pruning: only the one directory is listed/scanned.
         """
-        self._validate_keys(partition_values)
+        check_partition_keys(partition_values, self.partition_columns)
         rel = self._partition_rel_path(partition_values)
         if not self.url.list_parquet_files(self.url.join(rel)):
             return None
@@ -523,5 +526,5 @@ class HiveDataset:
     def delete_partition(self, partition_values: dict[str, str]) -> None:
         """Recursive delete of one partition directory
         (/root/reference/polario/hive_dataset.py:330-342)."""
-        self._validate_keys(partition_values)
+        check_partition_keys(partition_values, self.partition_columns)
         self.url.delete_dir(self.url.join(self._partition_rel_path(partition_values)))

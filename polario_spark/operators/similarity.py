@@ -367,35 +367,24 @@ def ngram_jaccard_pairs(
     # 3.6 s warm at sf0.1: materializing the deduped postings blocks
     # AQE's exchange reuse across the three consuming branches, which
     # already dedups the identical REPARTITION_BY_COL subtrees.)
-    # Round 15 (opt): the partition COUNT is pinned to the configured
-    # shuffle width. Without it AQE coalesces this exchange by its INPUT
-    # bytes (a few MB of postings at bench scale -> 5 partitions), but
-    # the self-join CONSUMING the exchange fans out ~Sum(min(df,cap)^2)
-    # rows — ~100x the input — so the most expensive stage of the
-    # pipeline ran on a handful of tasks. Input-byte statistics cannot
-    # see a join's output amplification; the conf value is the
-    # cluster-sized dial (scale-parameterized, AQE still splits skewed
-    # partitions within it). Interleaved A/B at sf0.1: 2.47 -> 1.72 s.
-    # Round 16: the r15-driver-flagged regression was re-adjudicated
-    # fresh at 32 cores (bench --fresh-retime: ratio 0.32 vs the clean
-    # r15 map — ACQUITTED; plans/r16/ngram_pin_ab.json carries a direct
-    # pin-vs-no-pin interleaved A/B). ``spark.polario.ngramPinPartitions``
-    # makes the width explicit for cluster operators ("off" disables the
-    # pin; default "auto" = shuffle.partitions), and a non-numeric
-    # shuffle.partitions (e.g. "auto" on some platforms) now falls back
-    # to defaultParallelism instead of raising (r15 ADVICE).
-    pin = rare.sparkSession.conf.get("spark.polario.ngramPinPartitions", "auto")
-    if pin != "off":
-        if pin != "auto":
-            width = int(pin)
-        else:
-            try:
-                width = int(
-                    rare.sparkSession.conf.get("spark.sql.shuffle.partitions")
-                )
-            except (TypeError, ValueError):
-                width = rare.sparkSession.sparkContext.defaultParallelism
-        rare = rare.repartition(width, *block_cols, "__g")
+    # The partition COUNT is pinned to the configured shuffle width.
+    # Without it AQE coalesces this exchange by its INPUT bytes (a few MB
+    # of postings at bench scale -> 5 partitions), but the self-join
+    # CONSUMING the exchange fans out ~Sum(min(df,cap)^2) rows — ~100x
+    # the input — so the most expensive stage of the pipeline ran on a
+    # handful of tasks. Input-byte statistics cannot see a join's output
+    # amplification; ``spark.sql.shuffle.partitions`` is the cluster-sized
+    # dial (AQE still splits skewed partitions within it). Interleaved
+    # A/B at sf0.1: 2.47 -> 1.72 s; on a 32-core host, 4 interleaved
+    # pin/no-pin pairs gave a min of 4.41 s pinned vs 11.34 s unpinned
+    # (pinned faster in 3 of 4 pairs), identical rows. A platform whose
+    # shuffle.partitions reads back non-numeric (e.g. "auto") falls back
+    # to defaultParallelism.
+    try:
+        width = int(rare.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        width = rare.sparkSession.sparkContext.defaultParallelism
+    rare = rare.repartition(width, *block_cols, "__g")
     rare = rare.dropDuplicates([id_col, *block_cols, "__g"])
     # set sizes are re-counted AFTER the df cut so |A|, |B|, and |A ∩ B|
     # all live in the same (capped) vocabulary — Jaccard stays exact.

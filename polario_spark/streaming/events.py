@@ -14,7 +14,6 @@ plan must produce byte-identical results to the batch plan.
 from __future__ import annotations
 
 import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,95 +29,89 @@ from pyspark.sql import types as T
 STATE_PARTITIONS = 8
 
 
-def _assert_no_data_batch_safe(
-    sink: DataFrame, output_mode: str, allow_watermark_gated_append: bool
-) -> None:
-    """Refuse sink shapes whose FINAL emission depends on the no-data
-    micro-batch ``_drain_conf`` disables (round 16, hardening the r15
-    optimization): an APPEND-mode streaming aggregation only emits a
-    window once the watermark passes it — with no-data batches off, a
-    finite drain stops before that batch and silently LOSES the last
-    windows. The same holds for append-mode (flat)MapGroupsWithState
-    timeouts. Every current drain is provably safe (complete-mode
-    re-emission / update-mode deltas / arrival-batch dedup admission /
-    inner-join emission on arrival); this guard makes the argument
-    structural instead of a docstring promise. A future drain that
-    NEEDS watermark-gated append must opt in explicitly — and keep
-    no-data batches ON."""
-    if allow_watermark_gated_append or output_mode != "append":
-        return
-    plan = sink._jdf.queryExecution().analyzed().toString()
-    risky = [
-        tok
-        for tok in (
-            "Aggregate",
-            "FlatMapGroupsWithState",
-            "FlatMapGroupsInPandasWithState",
-            "TransformWithState",
-        )
-        if tok in plan
-    ]
-    if risky:
-        raise ValueError(
-            "_drain_conf disables no-data micro-batches, but this "
-            f"append-mode sink contains {risky}: its watermark-gated "
-            "final emission would be silently dropped by a finite "
-            "drain. Use complete/update mode, or pass "
-            "allow_watermark_gated_append=True AND keep no-data "
-            "micro-batches enabled for this drain."
-        )
+#: logical plan nodes whose append-mode output waits on the watermark
+#: (window finalization, state timeouts): the no-data micro-batch that
+#: ``_drain`` turns off is the one that would emit their last rows.
+_WATERMARK_GATED_NODES = {
+    "Aggregate", "FlatMapGroupsWithState", "FlatMapGroupsInPandasWithState",
+    "TransformWithState", "TransformWithStateInPySpark",
+}
 
 
-@contextmanager
-def _drain_conf(
-    spark: SparkSession,
-    n: int = STATE_PARTITIONS,
-    sink: "DataFrame | None" = None,
-    output_mode: "str | None" = None,
-    allow_watermark_gated_append: bool = False,
-):
-    """Conf scope for the registry entries' finite drain-to-completion
-    queries: ``n`` shuffle/state partitions (see ``STATE_PARTITIONS``)
-    plus ``noDataMicroBatches.enabled=false``.
+def _plan_node_names(plan) -> set[str]:
+    """``nodeName()`` of every node in a py4j logical plan tree."""
+    names, stack = set(), [plan]
+    while stack:
+        node = stack.pop()
+        names.add(node.nodeName())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return names
 
-    After the data batch of a finite drain, Spark runs one more ZERO-ROW
-    micro-batch purely to advance the watermark (evict state, emit
-    watermark-gated appends). For every drain in this module that batch
-    cannot change the SINK: complete-mode aggregates re-emit the same
-    table, the sessionizer's evictions emit no deltas (state.remove()
-    only), streaming dropDuplicates admits rows in their arrival batch,
-    and the stream-stream inner join emits matches as they arrive —
-    state cleanup is the only effect, and the query stops right after.
-    The batch still costs a full pass over every state partition
-    (measured ~1.0 s of stateful_sessions' 2.7 s warm drain: 8
+
+def _drain(
+    sink: DataFrame, output_mode: str, n: int = STATE_PARTITIONS, foreach_batch=None
+) -> "DataFrame | None":
+    """Run ``sink`` to completion and return its memory-sink table (or
+    ``None`` when ``foreach_batch`` receives the micro-batches instead).
+
+    The drain runs with ``n`` shuffle/state partitions (see
+    ``STATE_PARTITIONS``) and no-data micro-batches off, both restored
+    afterwards. After the data batch of a finite drain, Spark runs one
+    more ZERO-ROW micro-batch purely to advance the watermark (evict
+    state, emit watermark-gated appends). For every drain in this module
+    that batch cannot change the SINK: complete-mode aggregates re-emit
+    the same table, the sessionizer's evictions emit no deltas
+    (state.remove() only), streaming dropDuplicates admits rows in their
+    arrival batch, and the stream-stream inner join emits matches as they
+    arrive — state cleanup is the only effect, and the query stops right
+    after. The batch still costs a full pass over every state partition
+    (~1.0 s of stateful_sessions' 2.7 s warm drain on a 32-core host: 8
     applyInPandasWithState partitions crossing the Python boundary with
     zero rows). A LONG-RUNNING production stream should keep no-data
     batches on — they are what makes watermark-gated results timely
-    between bursts; this scope is only for run-to-completion drains
-    whose sink provably cannot depend on it.
+    between bursts.
 
-    Round 16: that safety argument is now ENFORCED, not just documented
-    — pass the sink frame and its output mode and the scope refuses
-    append-mode aggregation / stateful-timeout shapes (see
-    ``_assert_no_data_batch_safe``).
+    An append-mode sink whose plan holds an aggregation or a stateful
+    timeout operator (``_WATERMARK_GATED_NODES``) emits its final rows
+    only in that skipped batch, so it is refused before the query starts.
     """
-    if sink is not None and output_mode is not None:
-        _assert_no_data_batch_safe(
-            sink, output_mode, allow_watermark_gated_append
+    if output_mode == "append":
+        gated = sorted(
+            _WATERMARK_GATED_NODES
+            & _plan_node_names(sink._jdf.queryExecution().analyzed())
         )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    old_ndmb = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+        if gated:
+            raise ValueError(
+                "a finite drain runs without no-data micro-batches, but "
+                f"this append-mode sink contains {gated}: its "
+                "watermark-gated final emission would be silently dropped. "
+                "Use complete or update mode."
+            )
+    spark = sink.sparkSession
+    scope = {
+        "spark.sql.shuffle.partitions": str(n),
+        "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+    }
+    saved = {key: spark.conf.get(key) for key in scope}
+    for key, value in scope.items():
+        spark.conf.set(key, value)
     try:
-        yield
+        writer = sink.writeStream.outputMode(output_mode)
+        if foreach_batch is None:
+            name = f"drain_{uuid.uuid4().hex[:8]}"
+            writer = writer.format("memory").queryName(name)
+        else:
+            writer = writer.foreachBatch(foreach_batch)
+        query = writer.start()
+        try:
+            query.processAllAvailable()
+        finally:
+            query.stop()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", old_ndmb
-        )
+        for key, value in saved.items():
+            spark.conf.set(key, value)
+    return None if foreach_batch is not None else spark.table(name)
 
 
 def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -186,19 +179,7 @@ def hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 2).alias("sum_value"),
         )
     )
-    name = f"hourly_{uuid.uuid4().hex[:8]}"
-    with _drain_conf(spark, sink=agg, output_mode="complete"):
-        query = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    return spark.table(name).select(
+    return _drain(agg, "complete").select(
         F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("hour"),
         "event_type",
         "n_events",
@@ -218,19 +199,7 @@ def sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count("*").alias("n_events"))
     )
-    name = f"sliding_{uuid.uuid4().hex[:8]}"
-    with _drain_conf(spark, sink=agg, output_mode="complete"):
-        query = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    return spark.table(name).select(
+    return _drain(agg, "complete").select(
         F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "event_type",
         "n_events",
@@ -364,33 +333,21 @@ def drain_sessions(spark: SparkSession, out: DataFrame) -> DataFrame:
     """Drain a ``sessionize_transform`` stream to a memory sink and SUM
     the per-trigger deltas into each user's final
     (n_sessions, total_events) row."""
-    name = f"sessions_{uuid.uuid4().hex[:8]}"
-    # Round 15 (opt): the sessionizer drain is Python-CPU-bound — one
+    # The sessionizer drain is Python-CPU-bound — one
     # applyInPandasWithState boundary crossing per state partition per
     # batch — so its width rides the session's core count instead of the
     # fixture-scale state default (8 partitions left 3/4 of a 32-core
-    # machine idle; measured 2.16 -> 1.59 s at sf0.1). max() keeps the
-    # state-volume dial authoritative when it is sized UP for production.
+    # machine idle; measured 2.16 -> 1.59 s there at sf0.1). max() keeps
+    # the state-volume dial authoritative when it is sized UP for
+    # production.
     n_sess = max(STATE_PARTITIONS, spark.sparkContext.defaultParallelism)
-    with _drain_conf(spark, n=n_sess, sink=out, output_mode="update"):
-        query = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .start()
+    return (
+        _drain(out, "update", n=n_sess)
+        .groupBy("user_id")
+        .agg(
+            F.sum("d_sessions").alias("n_sessions"),
+            F.sum("d_events").alias("total_events"),
         )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    return spark.sql(
-        f"""
-        SELECT user_id,
-               sum(d_sessions) AS n_sessions,
-               sum(d_events) AS total_events
-        FROM {name}
-        GROUP BY user_id
-        """
     )
 
 
@@ -434,20 +391,8 @@ def dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "2 hours")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
     )
-    name = f"dedup_{uuid.uuid4().hex[:8]}"
-    with _drain_conf(spark, sink=stream, output_mode="append"):
-        query = (
-            stream.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
     return (
-        spark.table(name)
+        _drain(stream, "append")
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_unique_users"))
         .orderBy(F.col("event_type").asc_nulls_last())
@@ -461,7 +406,7 @@ def static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The static side is a plain batch DataFrame joined into every
     micro-batch — no state store is involved. The dim is NOT
-    force-broadcast (round 11): customer scales with SF, so the planner
+    force-broadcast: customer scales with SF, so the planner
     picks broadcast from its size stats while it fits and a shuffled
     stream-static join when it doesn't — the same contract-bounded
     broadcast policy the batch queries adopted. The per-segment
@@ -498,20 +443,8 @@ def static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("value").alias("__sv"),
         )
     )
-    name = f"enrich_{uuid.uuid4().hex[:8]}"
-    with _drain_conf(spark, sink=enriched, output_mode="complete"):
-        query = (
-            enriched.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
     return (
-        spark.table(name)
+        _drain(enriched, "complete")
         .select(
             "c_mktsegment",
             "n_events",
@@ -598,15 +531,11 @@ def foreachbatch_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from polario_spark.workdir import work_dir
 
     out = work_dir(spark, "foreachbatch_totals") + "/partials"
-    stream = _event_stream(spark, sf_dir)
     # foreachBatch ships whole micro-batches to the sink function; the
     # plan has no aggregation, so append semantics are arrival-batch
-    with _drain_conf(spark, sink=stream, output_mode="append"):
-        query = stream.writeStream.foreachBatch(ledger_sink(out)).start()
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
+    _drain(
+        _event_stream(spark, sf_dir), "append", foreach_batch=ledger_sink(out)
+    )
     return read_ledger_totals(spark, out)
 
 
@@ -644,29 +573,14 @@ def click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("click_ts") <= F.col("purchase_ts"))
         & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 1 HOUR")),
     )
-    name = f"ssj_{uuid.uuid4().hex[:8]}"
-    # Round 15 (opt): a stream-stream join carries TWO state stores per
-    # partition (one per side), so at a given state volume its per-batch
-    # commit overhead is double every other drain's — halving the
-    # partition count keeps stores-per-drain roughly level with the
-    # single-store drains (measured 1.92 -> 1.39 s at sf0.1; the
+    # A stream-stream join carries TWO state stores per partition (one
+    # per side), so at a given state volume its per-batch commit overhead
+    # is double every other drain's — halving the partition count keeps
+    # stores-per-drain roughly level with the single-store drains
+    # (measured 1.92 -> 1.39 s at sf0.1 on a 32-core host; the
     # STATE_PARTITIONS dial still sizes production state volume).
-    with _drain_conf(
-        spark, n=max(STATE_PARTITIONS // 2, 1), sink=joined,
-        output_mode="append",
-    ):
-        query = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
     return (
-        spark.table(name)
+        _drain(joined, "append", n=max(STATE_PARTITIONS // 2, 1))
         .groupBy(
             F.date_format(
                 F.date_trunc("hour", "purchase_ts"), "yyyy-MM-dd HH:mm:ss"

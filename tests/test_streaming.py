@@ -236,15 +236,7 @@ def test_foreachbatch_ledger_layout_is_partitioned_by_batch_id(spark):
     assert dict(back.dtypes)["batch_id"] == "bigint"
 
 
-def test_drain_conf_refuses_watermark_gated_append_aggregation(spark, tmp_path):
-    """The r16 guard: a watermark-gated APPEND-mode aggregation under
-    ``_drain_conf`` would silently lose its final windows (no-data
-    micro-batches are disabled in that scope), so entering the scope
-    with such a sink must raise — and the explicit opt-in must pass."""
-    import pytest as _pytest
-
-    from polario_spark.streaming import events as EV
-
+def _one_window_source(tmp_path):
     pq.write_table(
         pa.table(
             {
@@ -255,6 +247,18 @@ def test_drain_conf_refuses_watermark_gated_append_aggregation(spark, tmp_path):
         ),
         str(tmp_path / "ev.parquet"),
     )
+
+
+def test_drain_refuses_watermark_gated_append_aggregation(spark, tmp_path):
+    """``_drain`` runs without no-data micro-batches, so a watermark-gated
+    APPEND-mode aggregation would silently lose its final windows: it must
+    be refused before any query starts, and the same plan must drain in
+    complete mode."""
+    import pytest as _pytest
+
+    from polario_spark.streaming import events as EV
+
+    _one_window_source(tmp_path)
     stream = (
         spark.readStream.schema("ts timestamp, event_type string, value double")
         .parquet(str(tmp_path))
@@ -263,14 +267,22 @@ def test_drain_conf_refuses_watermark_gated_append_aggregation(spark, tmp_path):
         .agg(F.count("*").alias("n"))
     )
     with _pytest.raises(ValueError, match="watermark-gated"):
-        with EV._drain_conf(spark, sink=stream, output_mode="append"):
-            pass
-    # complete mode over the same plan is fine
-    with EV._drain_conf(spark, sink=stream, output_mode="complete"):
-        pass
-    # explicit opt-in bypasses the refusal
-    with EV._drain_conf(
-        spark, sink=stream, output_mode="append",
-        allow_watermark_gated_append=True,
-    ):
-        pass
+        EV._drain(stream, "append")
+    assert not spark.streams.active
+    rows = EV._drain(stream, "complete").select("event_type", "n").collect()
+    assert [tuple(r) for r in rows] == [("click", 3)]
+
+
+def test_drain_reads_plan_nodes_not_column_names(spark, tmp_path):
+    """The append-mode guard looks at plan nodes: a column merely NAMED
+    ``Aggregate`` over a plan with no aggregation drains normally."""
+    from polario_spark.streaming import events as EV
+
+    _one_window_source(tmp_path)
+    stream = (
+        spark.readStream.schema("ts timestamp, event_type string, value double")
+        .parquet(str(tmp_path))
+        .select(F.col("value").alias("Aggregate"))
+    )
+    rows = EV._drain(stream, "append").collect()
+    assert sorted(r.Aggregate for r in rows) == [1.0, 2.0, 3.0]
