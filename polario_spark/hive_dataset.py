@@ -330,7 +330,7 @@ class HiveDataset:
     # ------------------------------------------------------------------
     def _writer(self, df: DataFrame, sort_by: Optional[list[str]] = None):
         df = guard_partition_values(df, self.partition_columns)
-        ordered = df.select(*self._data_columns(df), *self.partition_columns)
+        ordered = self._ordered(df)
         if sort_by:
             # cluster rows per hive partition, then order within each task
             # by the sort key: every fragment comes out sorted, so its

@@ -1168,13 +1168,12 @@ def _lsh_index_pairs(
 
     if bits_per_band > 62:
         # bit r-1 weighs 2^(r-1): past 62 a band signature no longer fits
-        # a 64-bit integer. The refusal lives HERE because every signature
-        # form funnels through this plane generator — the HOF path, the
-        # codegen path (whose `1 << j` SQL literals would otherwise parse
-        # as DECIMAL in Spark and silently change semantics when
-        # r*L <= LSH_CODEGEN_MAX_BITS, e.g. explicit r=70/L=7 dials —
-        # r13 advisor), and the DuckDB oracle builder. r = round(log2(n/B))
-        # reaches 62 only at n ~ 7e19 rows, so no sized corpus hits this.
+        # a 64-bit integer. The refusal lives HERE because both signature
+        # builders funnel through this plane generator: the numpy kernel
+        # (whose int64 weights would wrap) and the DuckDB oracle builder
+        # (whose `1 << j` SQL literals would widen past BIGINT).
+        # r = round(log2(n/B)) reaches 62 only at n ~ 7e19 rows, so no
+        # sized corpus hits this.
         raise ValueError(
             f"bits_per_band={bits_per_band} overflows the 64-bit band "
             f"signature; the sizing rule should never exceed 62 bits per band"
@@ -1197,81 +1196,83 @@ def _lsh_index_pairs(
 def _lsh_band_sigs(
     vec: str,
     dim: int,
-    dialect: str,
     bits_per_band: int = LSH_BITS_PER_BAND,
     n_bands: int = LSH_N_BANDS,
 ) -> list[str]:
-    """One integer signature expression per band, identical math in both
-    dialects (DuckDB lists are 1-based, Spark arrays 0-based)."""
+    """One DuckDB integer signature expression per band (the oracle's
+    banding; DuckDB lists are 1-based): bit j of a band's signature is
+    the sign test of that band's j-th ``_lsh_index_pairs`` plane and
+    weighs 2^j, as in ``_lsh_banded``."""
     idx = _lsh_index_pairs(dim, bits_per_band * n_bands, LSH_SEED, bits_per_band)
-    off = 1 if dialect == "duckdb" else 0
     sigs = []
     for band in range(n_bands):
         bits = []
         for j in range(bits_per_band):
             a, b = idx[band * bits_per_band + j]
             bits.append(
-                f"(CASE WHEN {vec}[{a + off}] > {vec}[{b + off}] "
+                f"(CASE WHEN {vec}[{a + 1}] > {vec}[{b + 1}] "
                 f"THEN {1 << j} ELSE 0 END)"
             )
         sigs.append(" + ".join(bits))
     return sigs
 
 
-#: Dial-product bound for the codegen signature path: r*L CASE scalar
-#: expressions in one projection compile fine at the fixed entries' 64
-#: and the gate-sized 95, but the Janino compiler itself OOMs somewhere
-#: below the x30 probe point's 4980 (round 12). 512 is comfortably
-#: inside compiled territory; above it the literal-array HOF form takes
-#: over (identical outputs, equivalence test-pinned).
-LSH_CODEGEN_MAX_BITS = 512
+def _lsh_banded(base: DataFrame, dim: int, r: int, n_bands: int) -> DataFrame:
+    """The LSH band signatures of ``base`` (``__id`` long, ``__v``
+    array<double>): one (``__id``, ``__v``, ``band``, ``sig``) row per
+    vector and band, with ``r`` bits per band over ``_lsh_index_pairs``.
 
+    One vectorized numpy kernel for every dial size. A codegen form (r*L
+    scalar CASEs in one projection) exceeds the JIT's huge-method limit
+    at sized dials (r*L in the hundreds) and runs as interpreted bytecode
+    (measured: the sig stage's executor CPU swung 1.8-28 s at sf0.1 with
+    multi-second GC, for ~0.6M comparisons); a literal-array HOF form is
+    interpreted per plane by construction. A sign test is an EXACT
+    comparison and a band signature an exact integer sum, so the kernel
+    produces bit-identical (band, sig) values to the DuckDB oracle built
+    from ``_lsh_band_sigs``. ``_lsh_index_pairs`` refuses r > 62 (a
+    64-bit signature overflows). The kernel yields in bounded slices:
+    output amplification is L rows per input row, so one 10k-row Arrow
+    batch would otherwise emit one L*10k-row batch in a single
+    allocation."""
+    idx_pairs = _lsh_index_pairs(dim, r * n_bands, LSH_SEED, r)
+    a_idx = [a for a, _ in idx_pairs]
+    b_idx = [b for _, b in idx_pairs]
 
-def _lsh_banded_hof(
-    base: DataFrame, vec_col: str, dim: int, r: int, n_bands: int
-) -> DataFrame:
-    """Band/sig assembly for large dial products, data-driven: hyperplane
-    index pairs ride as array LITERALS and the per-plane sign tests run
-    in interpreted higher-order functions — one ``__bits`` column bound
-    first (computed once per row), then L (band, sig) structs exploded.
-    Bitwise identical to the ``_lsh_band_sigs`` codegen form: bit j of a
-    band's signature weighs 2^j over the same ``_lsh_index_pairs``
-    order. See cosine_pairs_bucketed for why this form exists."""
-    # r > 62 refused inside _lsh_index_pairs (r13 advisor: the refusal
-    # must cover the codegen form too, so it lives in the shared funnel)
-    idx = _lsh_index_pairs(dim, r * n_bands, LSH_SEED, r)
-    a_lit = F.lit([a for a, _ in idx])
-    b_lit = F.lit([b for _, b in idx])
-    # LONG weights and a LONG accumulator, unconditionally: at r >= 32
-    # the 1 << 31 weight exceeds INT and the literal array promotes to
-    # array<bigint> on its own — an INT accumulator then fails analysis
-    # exactly at the corpus sizes (n > ~3e10) the sized rule exists for
-    # (r12 advisor). The codegen form's CASE sums stay INT at r <= 31,
-    # but sig values are equal integers either way (equivalence pinned
-    # in tests/test_operators.py) and each join binds one form only.
-    w_lit = F.lit([1 << j for j in range(r)]).cast("array<bigint>")
-    bits = F.zip_with(
-        F.transform(a_lit, lambda i: F.element_at(F.col(vec_col), i + 1)),
-        F.transform(b_lit, lambda i: F.element_at(F.col(vec_col), i + 1)),
-        lambda x, y: F.when(x > y, F.lit(1)).otherwise(F.lit(0)),
-    )
-    bs = F.transform(
-        F.sequence(F.lit(0), F.lit(n_bands - 1)),
-        lambda band: F.struct(
-            band.alias("band"),
-            F.aggregate(
-                F.sequence(F.lit(1), F.lit(r)),
-                F.lit(0).cast("long"),
-                lambda acc, j: acc
-                + F.element_at(F.col("__bits"), band * r + j)
-                * F.element_at(w_lit, j),
-            ).alias("sig"),
-        ),
-    )
-    return (
-        base.withColumn("__bits", bits)
-        .withColumn("__bs", F.explode(bs))
-        .drop("__bits")
+    def band_sigs_stream(batches):
+        import numpy as np
+        import pandas as pd
+
+        A = np.asarray(a_idx, np.int64)
+        B = np.asarray(b_idx, np.int64)
+        W = np.int64(1) << np.arange(r, dtype=np.int64)
+        OUT_SLICE = 1 << 15
+        for pdf in batches:
+            n = len(pdf)
+            if n == 0:
+                continue
+            mat = _VK.stack(pdf["__v"], "LSH banding")
+            bits = mat[:, A] > mat[:, B]
+            sigs = (bits.reshape(n, n_bands, r) * W[None, None, :]).sum(
+                axis=2, dtype=np.int64
+            )
+            ids = np.repeat(pdf["__id"].to_numpy(), n_bands)
+            vecs = np.repeat(pdf["__v"].to_numpy(), n_bands)
+            band = np.tile(np.arange(n_bands, dtype=np.int32), n)
+            sig = sigs.reshape(-1)
+            for o in range(0, n * n_bands, OUT_SLICE):
+                yield pd.DataFrame(
+                    {
+                        "__id": ids[o : o + OUT_SLICE],
+                        "__v": vecs[o : o + OUT_SLICE],
+                        "band": band[o : o + OUT_SLICE],
+                        "sig": sig[o : o + OUT_SLICE],
+                    }
+                )
+
+    return base.mapInPandas(
+        band_sigs_stream,
+        schema="__id long, __v array<double>, band int, sig long",
     )
 
 
@@ -1292,20 +1293,21 @@ def cosine_pairs_bucketed(
     (the corpus-sized rule the ``dedup_embedding_cosine_lsh_sized`` entry
     gates) — the 100 TB default is that SIZED operating point.
 
-    Plan shape: each vector computes L band signatures in pure codegen
-    (sign tests on coordinate differences — genuine random-hyperplane LSH
-    with planes e_a - e_b), explodes to L rows, and candidate pairs fall
-    out of a self-equi-join on (band, signature). Only same-bucket pairs
-    are verified with the exact cosine expression; a groupBy dedups pairs
-    colliding in several bands before the verify runs, so each candidate
-    pair is scored once. Shuffle volume is L rows per vector (linear);
-    the pair space is never enumerated. Degenerate buckets (boilerplate
-    corpora collapsing many vectors into one (band, sig)) cannot blow a
-    task: the per-bucket verify sub-tiles its GEMM at ``COSINE_TILE``
-    (see ``bucket_pairs_stream``), so peak memory per task is one tile pair
-    regardless of bucket size. (AQE skew-join does NOT help here — it
-    splits join/shuffle partitions, not applyInPandas groups.) Raising
-    LSH_BITS_PER_BAND splits buckets geometrically for denser corpora.
+    Plan shape: each vector computes L band signatures in one numpy kernel
+    (``_lsh_banded``: sign tests on coordinate differences — genuine
+    random-hyperplane LSH with planes e_a - e_b), explodes to L rows, and
+    candidate pairs fall out of a self-equi-join on (band, signature). Only
+    same-bucket pairs are verified with the exact cosine expression; a
+    groupBy dedups pairs colliding in several bands before the verify runs,
+    so each candidate pair is scored once. Shuffle volume is L rows per
+    vector (linear); the pair space is never enumerated. Degenerate buckets
+    (boilerplate corpora collapsing many vectors into one (band, sig))
+    cannot blow a task: the per-bucket verify sub-tiles its GEMM at
+    ``COSINE_TILE`` (see ``bucket_pairs_stream``), so peak memory per task
+    is one tile pair regardless of bucket size. (AQE skew-join does NOT help
+    here — it splits join/shuffle partitions, not applyInPandas groups.)
+    Raising LSH_BITS_PER_BAND splits buckets geometrically for denser
+    corpora.
 
     Approximation is in CANDIDATE GENERATION only (a >= threshold pair
     colliding in no band is missed); every returned pair carries its
@@ -1355,62 +1357,7 @@ def cosine_pairs_bucketed(
         F.col(id_col).alias("__id"),
         F.expr(f"transform({vec_col}, x -> cast(x as double))").alias("__v"),
     )
-    # Signature assembly is ONE vectorized numpy kernel for every dial
-    # size. A codegen form (r*L scalar CASEs in one projection) exceeds
-    # the JIT's huge-method limit at sized dials (r*L in the hundreds)
-    # and runs as interpreted bytecode (measured: the sig stage's
-    # executor CPU swung 1.8-28 s at sf0.1 with multi-second GC, for
-    # ~0.6M comparisons); the literal-array HOF form is interpreted per
-    # plane by construction. A sign test is an EXACT comparison and a
-    # band signature an exact small-integer sum, so numpy produces
-    # bit-identical (band, sig) values to both expression forms and to
-    # the DuckDB oracle built from _lsh_band_sigs. _lsh_index_pairs
-    # stays the shared refusal funnel (r > 62 overflows a 64-bit
-    # signature). The kernel yields in bounded slices: output
-    # amplification is L rows per input row, so one 10k-row Arrow batch
-    # would otherwise emit one L*10k-row batch in a single allocation.
-    idx_pairs = _lsh_index_pairs(
-        dim, bits_per_band * n_bands, LSH_SEED, bits_per_band
-    )
-    _a_idx = [a for a, _ in idx_pairs]
-    _b_idx = [b for _, b in idx_pairs]
-    _r, _L = bits_per_band, n_bands
-
-    def band_sigs_stream(batches):
-        import numpy as np
-        import pandas as pd
-
-        A = np.asarray(_a_idx, np.int64)
-        B = np.asarray(_b_idx, np.int64)
-        W = (np.int64(1) << np.arange(_r, dtype=np.int64))
-        OUT_SLICE = 1 << 15
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            mat = _VK.stack(pdf["__v"], "LSH banding")
-            bits = mat[:, A] > mat[:, B]
-            sigs = (bits.reshape(n, _L, _r) * W[None, None, :]).sum(
-                axis=2, dtype=np.int64
-            )
-            ids = np.repeat(pdf["__id"].to_numpy(), _L)
-            vecs = np.repeat(pdf["__v"].to_numpy(), _L)
-            band = np.tile(np.arange(_L, dtype=np.int32), n)
-            sig = sigs.reshape(-1)
-            for o in range(0, n * _L, OUT_SLICE):
-                yield pd.DataFrame(
-                    {
-                        "__id": ids[o : o + OUT_SLICE],
-                        "__v": vecs[o : o + OUT_SLICE],
-                        "band": band[o : o + OUT_SLICE],
-                        "sig": sig[o : o + OUT_SLICE],
-                    }
-                )
-
-    sigs = base.mapInPandas(
-        band_sigs_stream,
-        schema="__id long, __v array<double>, band int, sig long",
-    )
+    sigs = _lsh_banded(base, dim, bits_per_band, n_bands)
     if n_rows is not None:
         stream_bytes = n_rows * n_bands * (dim * 8 + 48)
         parts = max(32, -(-stream_bytes // (128 << 20)))
@@ -1542,7 +1489,7 @@ def cosine_pairs_bucketed_sql(
         f"{sig} AS sig FROM {table} "
         f"WHERE {well_formed_sql(vec_col, dim)}"
         for band, sig in enumerate(
-            _lsh_band_sigs(vec_col, dim, "duckdb", bits_per_band, n_bands)
+            _lsh_band_sigs(vec_col, dim, bits_per_band, n_bands)
         )
     )
     sim = VEC.cosine("a.__v", "b.__v", "duckdb")

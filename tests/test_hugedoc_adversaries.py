@@ -32,9 +32,6 @@ import os
 import duckdb
 import pytest
 
-import __spark_entry__ as entry_mod
-from polario_spark.queries import _GATE_SF_DIR
-from polario_spark.workdir import rebind_stable_paths
 from polario_spark.sources.tables import TABLES
 
 CLEAN_SF = "/root/testdata/sf0.001"
@@ -85,29 +82,6 @@ COPY (
     return str(d)
 
 
-@pytest.fixture(scope="module")
-def adv_duck(adv_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{adv_dir}/{t}.parquet')"
-        )
-    return con
-
-
 @pytest.mark.parametrize("name", AFFECTED)
-def test_text_entries_survive_huge_documents(
-    spark, adv_dir, adv_duck, oracle_mismatch, name
-):
-    fn = entry_mod.queries()[name]
-    # stable artifacts are corpus-keyed; rebind the baked gate-corpus
-    # path literals to where THIS corpus's run writes
-    oracle = rebind_stable_paths(
-        entry_mod.oracle_sql()[name], _GATE_SF_DIR, adv_dir
-    )
-    sdf = fn(spark, adv_dir)
-    problem = oracle_mismatch(
-        sdf.schema, sdf.collect(), adv_duck.sql(oracle).arrow()
-    )
-    assert problem is None, f"{name}: {problem}"
+def test_text_entries_survive_huge_documents(entry_mismatch, adv_dir, name):
+    assert entry_mismatch(adv_dir, name) is None

@@ -986,16 +986,11 @@ def test_lsh_sized_dials_threshold_edges():
     assert bands >= 1 and math.isfinite(bands)
 
 
-def test_lsh_banded_hof_long_signatures(spark):
-    """r12 advisor: at r >= 32 the 1 << 31 weight promotes the literal
-    weight array to array<bigint>; with the old INT accumulator the HOF
-    path failed analysis at exactly the corpus sizes the sized rule
-    exists for. Pin that r=33 now ANALYZES and computes the right
-    >2^31 signature, and that r > 62 refuses with a clear error."""
-    from pyspark.sql import functions as F
-
-    import pytest
-
+def test_lsh_banded_long_signatures(spark):
+    """At r >= 32 bit 31 weighs 2^31, past INT range: the band signature
+    must be a bigint that holds the full weight sum. Pin that r=33
+    computes the right > 2^31 signature, and that r > 62 refuses with a
+    clear error at every signature builder."""
     # an ascending vector sets bit j exactly when plane j's pair has
     # a > b — which under LSH_SEED includes bit 32, so the expected
     # signature exceeds int32 range
@@ -1005,23 +1000,18 @@ def test_lsh_banded_hof_long_signatures(spark):
             "transform(sequence(0, 63), x -> cast(x as double))"
         ).alias("__v"),
     )
-    banded = similarity._lsh_banded_hof(base, "__v", 64, 33, 1).select(
-        F.col("__bs.sig").alias("sig")
-    )
+    banded = similarity._lsh_banded(base, 64, 33, 1)
     assert banded.schema["sig"].dataType.simpleString() == "bigint"
-    rows = banded.collect()
+    rows = banded.select("sig").collect()
     assert len(rows) == 1
     idx = similarity._lsh_index_pairs(64, 33, similarity.LSH_SEED, 33)
     want = sum(1 << j for j, (a, b) in enumerate(idx) if a > b)
     assert rows[0].sig == want and want > 2**31
     with pytest.raises(ValueError, match="64-bit band signature"):
-        similarity._lsh_banded_hof(base, "__v", 64, 63, 1)
-    # r13 advisor: the CODEGEN form must refuse identically — r=70/L=7
-    # lands under LSH_CODEGEN_MAX_BITS (490 <= 512), where the old guard
-    # (HOF-only) let `1 << j` SQL literals exceed BIGINT and parse as
-    # DECIMAL, silently changing signature semantics. The refusal now
-    # lives in the shared _lsh_index_pairs funnel, so every entry point
-    # (bucketed join, raw sig builder, DuckDB oracle builder) throws.
+        similarity._lsh_banded(base, 64, 63, 1)
+    # the refusal lives in the shared _lsh_index_pairs funnel, so the
+    # bucketed join and the DuckDB oracle builder refuse too — the
+    # oracle's `1 << j` SQL literals would otherwise widen past BIGINT
     emb = spark.range(2).select(
         F.col("id").alias("vec_id"),
         F.expr("transform(sequence(0, 63), x -> cast(x as double))").alias(
@@ -1033,7 +1023,7 @@ def test_lsh_banded_hof_long_signatures(spark):
             emb, "vec_id", "embedding", 0.45, bits_per_band=70, n_bands=7
         )
     with pytest.raises(ValueError, match="64-bit band signature"):
-        similarity._lsh_band_sigs("__v", 64, "spark", 70, 7)
+        similarity._lsh_band_sigs("__v", 64, 70, 7)
     with pytest.raises(ValueError, match="64-bit band signature"):
         similarity.cosine_pairs_bucketed_sql(
             "embeddings", "vec_id", "embedding", 0.45,
@@ -1147,42 +1137,40 @@ def test_dedup_ngram_jaccard_builds_without_count_job(spark, monkeypatch):
     assert df.columns == ["id_a", "id_b", "jaccard"]
 
 
-def test_lsh_hof_banding_matches_codegen_form(spark):
-    """The two signature-assembly forms (codegen CASE expressions vs the
-    literal-array HOF path that large sized dials dispatch to) must
-    produce IDENTICAL (id, band, sig) sets — the HOF form exists only
-    because Janino OOMs compiling thousands of scalar CASEs, never to
-    change the banding. Pinned at dials where both run comfortably."""
-    from pyspark.sql import functions as F
+def test_lsh_banding_matches_duckdb_oracle(spark):
+    """The production band signatures (``_lsh_banded``'s numpy kernel,
+    which ``cosine_pairs_bucketed`` buckets on) must equal the DuckDB
+    oracle's ``_lsh_band_sigs`` expressions for every (id, band): the
+    oracle's candidate set is only the same when the banding is. Pinned
+    over the sf0.001 embeddings at r=5, L=19, where every bit weight and
+    plane order shows in the signatures."""
+    import duckdb
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    path = "/root/testdata/sf0.001/embeddings.parquet"
+    emb = spark.read.parquet(path)
     base = similarity.well_formed_vectors(emb, "embedding", 64).select(
         F.col("vec_id").alias("__id"),
         F.expr("transform(embedding, x -> cast(x as double))").alias("__v"),
     )
     r, n_bands = 5, 19
-    sig_structs = ", ".join(
-        f"named_struct('band', {band}, 'sig', {sig})"
+    got = {
+        tuple(x)
+        for x in similarity._lsh_banded(base, 64, r, n_bands)
+        .select("__id", "band", "sig")
+        .collect()
+    }
+    oracle = "\nUNION ALL\n".join(
+        f"SELECT vec_id, {band} AS band, {sig} AS sig "
+        f"FROM read_parquet('{path}') "
+        f"WHERE {similarity.well_formed_sql('embedding', 64)}"
         for band, sig in enumerate(
-            similarity._lsh_band_sigs("__v", 64, "spark", r, n_bands)
+            similarity._lsh_band_sigs("embedding", 64, r, n_bands)
         )
     )
-    codegen = {
-        (x["__id"], x.band, x.sig)
-        for x in base.withColumn(
-            "__bs", F.explode(F.expr(f"array({sig_structs})"))
-        )
-        .select("__id", F.col("__bs.band").alias("band"), F.col("__bs.sig").alias("sig"))
-        .collect()
-    }
-    hof = {
-        (x["__id"], x.band, x.sig)
-        for x in similarity._lsh_banded_hof(base, "__v", 64, r, n_bands)
-        .select("__id", F.col("__bs.band").alias("band"), F.col("__bs.sig").alias("sig"))
-        .collect()
-    }
-    assert len(codegen) == 500 * n_bands
-    assert hof == codegen
+    con = duckdb.connect()
+    want = set(con.sql(oracle).fetchall())
+    assert len(want) == 500 * n_bands
+    assert got == want
 
 
 def test_collect_stride_centroids_fused_matches_two_job_path(spark):

@@ -5,13 +5,9 @@ values) — the same comparison the correctness gate performs."""
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
-from polario_spark.queries import _GATE_SF_DIR
-from polario_spark.workdir import rebind_stable_paths
-from polario_spark.sources.tables import TABLES
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -64,29 +60,9 @@ SUBSET = [
 ]
 
 
-@pytest.fixture(scope="module")
-def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    return con
-
-
 @pytest.mark.parametrize("name", SUBSET)
-def test_query_matches_oracle(spark, duck, oracle_mismatch, name):
-    fn = entry_mod.queries()[name]
-    # stable artifacts are corpus-keyed; rebind the baked gate-corpus
-    # path literals to where THIS corpus's run writes
-    oracle = rebind_stable_paths(
-        entry_mod.oracle_sql()[name], _GATE_SF_DIR, SF_DIR
-    )
-    sdf = fn(spark, SF_DIR)
-    problem = oracle_mismatch(
-        sdf.schema, sdf.collect(), duck.sql(oracle).arrow()
-    )
-    assert problem is None, f"{name}: {problem}"
+def test_query_matches_oracle(entry_mismatch, name):
+    assert entry_mismatch(SF_DIR, name) is None
 
 
 def test_entry_smoke(spark):

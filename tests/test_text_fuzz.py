@@ -119,18 +119,16 @@ ENTRY_AFFECTED = ["repetition_signals", "dedup_rolling_windows"]
 
 
 @pytest.mark.parametrize("name", ENTRY_AFFECTED)
-def test_affected_entries_on_empty_and_nbsp_docs(spark, tmp_path, name):
+def test_affected_entries_on_empty_and_nbsp_docs(
+    entry_mismatch, tmp_path, name
+):
     """Entry-level pin of both round-9 fuzz findings: a corpus holding
     zero-token documents ('' / whitespace-only / punctuation-only — the
     window_hashes NULL-vs-md5('') divergence) and NBSP-leading lines
     (the lines() trim divergence) must agree with the oracle."""
-    import math
     import os
 
-    import __spark_entry__ as entry_mod
-    from polario_spark.queries import _GATE_SF_DIR
     from polario_spark.sources.tables import TABLES
-    from polario_spark.workdir import rebind_stable_paths
 
     clean = "/root/testdata/sf0.001"
     d = tmp_path / "nbsp_empty"
@@ -151,36 +149,7 @@ COPY (
     (92005, 'dup line' || chr(10) || chr(160) || 'dup line' || chr(10) || 'dup line', 'de', 'src_fuzz', 27)
   ) t(doc_id, text, lang, source, n_chars)
 ) TO '{d}/documents.parquet' (FORMAT PARQUET)""")
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{d}/{t}.parquet')"
-        )
-
-    fn = entry_mod.queries()[name]
-    # round 14: stable artifacts are corpus-keyed; rebind the baked
-    # gate-corpus path literals to where THIS corpus's run writes
-    oracle = rebind_stable_paths(
-        entry_mod.oracle_sql()[name], _GATE_SF_DIR, str(d)
-    )
-    sdf = fn(spark, str(d))
-    rel = con.sql(oracle)
-    assert sorted(sdf.columns) == sorted(rel.columns)
-
-    def norm(rows, columns):
-        order = sorted(range(len(columns)), key=lambda i: columns[i])
-
-        def f(v):
-            if isinstance(v, float):
-                return "nan" if math.isnan(v) else f"{v:.6f}"
-            return str(v)
-
-        return sorted(tuple(f(r[i]) for i in order) for r in rows)
-
-    srows = norm([tuple(r) for r in sdf.collect()], sdf.columns)
-    drows = norm(rel.fetchall(), list(rel.columns))
-    assert len(srows) == len(drows), name
-    assert srows == drows, name
+    assert entry_mismatch(str(d), name) is None
 
 
 def test_invalid_utf8_parquet_behavior_is_pinned(spark, tmp_path):

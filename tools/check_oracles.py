@@ -110,48 +110,97 @@ def mismatch(schema: StructType, rows, oracle: pa.Table) -> Optional[str]:
     return None
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    only = set(sys.argv[2:])
-    spark = get_spark("check_oracles")
+def oracle_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with every corpus table as a view over
+    ``sf_dir``'s parquet files: the oracles' FROM clauses name the bare
+    tables."""
     con = duckdb.connect()
     for t in TABLES:
         con.sql(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
-    qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
+    return con
+
+
+def _run_entry(spark, con, sf_dir: str, name: str):
+    """Run entry ``name`` on ``sf_dir`` and its oracle on ``con``:
+    (problem, Spark schema, Spark rows, oracle Arrow table). ``problem``
+    is a ``spark error:`` / ``oracle error:`` string or None; the table is
+    None for a rows-only entry, which has no oracle."""
+    try:
+        sdf = entry_mod.queries()[name](spark, sf_dir)
+        rows = sdf.collect()
+    except Exception as exc:
+        return f"spark error: {exc}", None, None, None
+    sql = entry_mod.oracle_sql().get(name)
+    if sql is None:
+        return None, sdf.schema, rows, None
+    try:
+        # stable artifacts are corpus-keyed: rebind the gate-corpus path
+        # literals baked into the oracle to where this sf_dir's run writes
+        # (a no-op at the gate corpus and for path-free oracles)
+        rel = con.sql(rebind_stable_paths(sql, _GATE_SF_DIR, sf_dir))
+        oracle = rel.arrow()
+    except Exception as exc:
+        return f"oracle error: {str(exc)[:200]}", sdf.schema, rows, None
+    return None, sdf.schema, rows, oracle
+
+
+def check_entry(spark, con, sf_dir: str, name: str) -> Optional[str]:
+    """Why entry ``name`` on corpus ``sf_dir`` differs from its DuckDB
+    oracle run on ``con`` (an ``oracle_views(sf_dir)`` connection), or
+    None when it matches; see ``mismatch``. A rows-only entry passes when
+    its Spark side runs."""
+    problem, schema, rows, oracle = _run_entry(spark, con, sf_dir, name)
+    if problem is None and oracle is not None:
+        problem = mismatch(schema, rows, oracle)
+    return problem
+
+
+def check_order(
+    spark, con, sf_dir: str, name: str, keys: list[str]
+) -> Optional[str]:
+    """Why the sequence of entry ``name``'s final-sort ``keys`` tuples
+    differs from its oracle's, or None. ``mismatch`` sorts rows before
+    comparing, so it cannot see the engines put NULL keys at opposite
+    ends; only the key columns are compared, because row order within a
+    tie is free in both engines."""
+    problem, _, rows, oracle = _run_entry(spark, con, sf_dir, name)
+    if problem is not None:
+        return problem
+    skeys = [tuple(str(r[c]) for c in keys) for r in rows]
+    dkeys = [tuple(str(d[c]) for c in keys) for d in oracle.to_pylist()]
+    if skeys == dkeys:
+        return None
+    at = next(
+        (i for i, (a, b) in enumerate(zip(skeys, dkeys)) if a != b),
+        min(len(skeys), len(dkeys)),
+    )
+    return (
+        f"{keys} order differs from row {at} (spark={len(skeys)} rows, "
+        f"duck={len(dkeys)}): {skeys[at:at + 3]} vs {dkeys[at:at + 3]}"
+    )
+
+
+def main() -> int:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    only = set(sys.argv[2:])
+    spark = get_spark("check_oracles")
+    con = oracle_views(sf_dir)
     failures = []
-    for name, fn in qs.items():
+    for name in entry_mod.queries():
         if only and name not in only:
             continue
-        try:
-            sdf = fn(spark, sf_dir)
-            srows = sdf.collect()
-        except Exception as exc:
-            failures.append(name)
-            print(f"FAIL  {name}: spark error: {exc}")
-            continue
-        if name not in oracles:
-            print(f"rows-only  {name}: {len(srows)} rows")
-            continue
-        try:
-            # round 14: stable artifacts are corpus-keyed — rebind the
-            # baked gate-corpus path literals to where THIS sf_dir's run
-            # writes (no-op at the gate corpus and for path-free oracles)
-            rel = con.sql(
-                rebind_stable_paths(oracles[name], _GATE_SF_DIR, sf_dir)
-            )
-            dtbl = rel.arrow()
-        except Exception as exc:
-            failures.append(name)
-            print(f"FAIL  {name}: oracle error: {str(exc)[:200]}")
-            continue
-        problem = mismatch(sdf.schema, srows, dtbl)
+        problem, schema, rows, oracle = _run_entry(spark, con, sf_dir, name)
+        if problem is None and oracle is not None:
+            problem = mismatch(schema, rows, oracle)
         if problem:
             failures.append(name)
             print(f"FAIL  {name}: {problem}")
-            continue
-        print(f"OK    {name}: {len(srows)} rows")
+        elif oracle is None:
+            print(f"rows-only  {name}: {len(rows)} rows")
+        else:
+            print(f"OK    {name}: {len(rows)} rows")
     spark.stop()
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     return 1 if failures else 0

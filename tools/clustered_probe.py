@@ -267,12 +267,9 @@ def lsh_buckets(sf_dir: str, tau: float, label: str | None) -> dict:
         F.col("vec_id").alias("__id"),
         F.expr("transform(embedding, x -> cast(x as double))").alias("__v"),
     )
-    # the HOF signature form — bitwise identical to the codegen form
-    # (equivalence test-pinned), and valid at any dial product
-    banded = similarity._lsh_banded_hof(base, "__v", 64, r, n_bands)
-    sizes = banded.groupBy(
-        F.col("__bs.band").alias("band"), F.col("__bs.sig").alias("sig")
-    ).agg(F.count(F.lit(1)).alias("m"))
+    # the production signature frame cosine_pairs_bucketed buckets on
+    banded = similarity._lsh_banded(base, 64, r, n_bands)
+    sizes = banded.groupBy("band", "sig").agg(F.count(F.lit(1)).alias("m"))
     agg = sizes.agg(
         F.max("m").alias("max_bucket"),
         F.expr("percentile_approx(m, 0.99)").alias("p99_bucket"),
